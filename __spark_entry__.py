@@ -1868,7 +1868,7 @@ def _ltm_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     column; the list result is surfaced as a one-column frame."""
     df = _null_panel(spark, sf_dir).withColumn("dead", F.lit(None).cast("double"))
     cols = missing.list_totally_missing(df)
-    return spark.createDataFrame([(c,) for c in cols], schema="col string")
+    return P.local_table(spark, [(c,) for c in cols], "col string")
 
 
 def _mice_query(spark: SparkSession, sf_dir: str) -> DataFrame:

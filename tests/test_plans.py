@@ -5,6 +5,8 @@ pushdown reaching the parquet scan, kernel/interaction tables broadcast,
 and chained same-key window ops sharing one shuffle.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -503,3 +505,52 @@ def test_profile_sketch_register_pass_plan(spark):
     # exact-stats stack() melt over the 1-row aggregate)
     assert p.count("Generate explode") == 1
     assert "HashAggregate" in p
+
+
+def _leaves(plan: str, node: str) -> list[str]:
+    """Column lists of every ``node`` leaf, expression ids stripped."""
+    return [
+        ", ".join(c.strip() for c in re.sub(r"#\d+L?", "", cols).split(","))
+        for cols in re.findall(re.escape(node) + r"\s*\[([^\]]*)\]", plan)
+    ]
+
+
+_PANEL = "time_id, unit_id, value"
+_BOXES = "time_id, __lvl, __bx, __by, value"
+
+
+@pytest.mark.parametrize(
+    "op, side_tables, pins",
+    [
+        ("spatial_tree_lag", ["pgid, lvl, bx, by, w"], [_PANEL] * 2),
+        ("temporal_tree_lag", ["tnow, s, e, fn, w", "t, s, e, sgn"], [_PANEL] * 2),
+        ("grid_lag", ["__k, __w_0"], [_PANEL] * 2 + [_BOXES] * 3),
+        ("splag4d", ["dx, dy, w"], [_PANEL] * 2),
+        ("exact_quantiles", ["percent"], []),
+    ],
+)
+def test_side_tables_are_local_table_scans(spark, op, side_tables, pins):
+    """Driver-built side tables (interaction lists, boundary, weight and
+    kernel tables, percent lists) are Arrow LocalRelations: each plans as
+    a LocalTableScan, and every ``Scan ExistingRDD`` left in the plan is one
+    of the operator's own checkpoint pins. A pickled side table would add
+    a ``Scan ExistingRDD`` leaf whose first read starts Python workers."""
+    from views_transformation_library_spark.operators import profiling, trees
+
+    cells = [(r, c) for r in range(4) for c in range(4)]
+    grid = make_panel(
+        spark, [(t, r * 720 + c + 1, float(t + r + c)) for t in range(3) for r, c in cells]
+    )
+    tpan = make_panel(spark, [(t, u, float(t * u)) for t in range(8) for u in range(3)])
+    out = {
+        "spatial_tree_lag": lambda: trees.spatial_tree_lag(grid, 0.5, 0),
+        "temporal_tree_lag": lambda: trees.temporal_tree_lag(tpan, 0.5, "uniform"),
+        "grid_lag": lambda: trees.grid_lag(grid, 50.0, 0),
+        "splag4d": lambda: spatial_grid.splag4d(grid, 1, 1, 0, 0),
+        "exact_quantiles": lambda: profiling.exact_quantiles(tpan, "value"),
+    }[op]()
+    plan = plans.physical_plan(out)
+    local = _leaves(plan, "LocalTableScan")
+    for cols in side_tables:
+        assert cols in local, (cols, local)
+    assert sorted(_leaves(plan, "Scan ExistingRDD")) == sorted(pins)

@@ -282,6 +282,45 @@ def test_exact_quantiles_range_path_matches_other_paths(spark):
         profiling.exact_quantiles(df, "g", range_buckets=4)
 
 
+def test_exact_quantiles_range_path_non_finite(spark):
+    """±Inf stay out of range_buckets' min/max (as NaN does): -Inf pins
+    to bucket 0, +Inf to the top bucket, so every row keeps its rank and
+    the tier returns the raw path's rows."""
+    from views_transformation_library_spark.operators import profiling
+
+    inf = float("inf")
+    rows = (
+        [("a", -inf), ("a", inf), ("a", float("nan"))]
+        + [("a", float(i)) for i in range(20)]
+        + [("b", inf)] * 3 + [("b", -inf)] * 2 + [("b", float("nan"))]
+        + [("c", -inf), ("c", 4.0)]
+    )
+    df = spark.createDataFrame(rows, "g string, x double")
+    kw = dict(percents=(1, 10, 25, 50, 75, 90, 96, 100), group_cols=["g"])
+
+    def rows_of(out):
+        return sorted(tuple(map(repr, r)) for r in out.collect())
+
+    raw = rows_of(profiling.exact_quantiles(df, "x", pre_aggregate=False, **kw))
+    assert len(raw) == 3 * len(kw["percents"])
+    for b in (1, 3, 16):
+        assert rows_of(profiling.exact_quantiles(df, "x", range_buckets=b, **kw)) == raw
+
+
+def test_exact_quantiles_range_path_rejects_dates(spark):
+    import datetime
+
+    import pytest
+
+    from views_transformation_library_spark.operators import profiling
+
+    df = spark.createDataFrame(
+        [(datetime.date(2020, 1, d),) for d in range(1, 5)], "d date"
+    )
+    with pytest.raises(ValueError, match="got 'd': date"):
+        profiling.exact_quantiles(df, "d", range_buckets=4)
+
+
 def test_exact_quantiles_rejects_out_of_range_percents(spark):
     import pytest
 

@@ -83,3 +83,20 @@ def test_tree_operators_use_bounded_axis(spark):
             trees.temporal_tree_lag(big, thetacrit=0.5)
     finally:
         trees.TIME_AXIS_CAP = orig
+
+
+def test_default_driver_memory_follows_host(tmp_path):
+    """Half of MemTotal in whole GiB, clamped to [1g, 24g]; the ceiling
+    when MemTotal cannot be read."""
+    from views_transformation_library_spark.session import default_driver_memory
+
+    def sized(total_kib):
+        p = tmp_path / "meminfo"
+        p.write_text(f"MemFree:  1024 kB\nMemTotal:  {total_kib} kB\n")
+        return default_driver_memory(str(p))
+
+    gib = 1024 * 1024
+    assert sized(15 * gib + 512) == "7g"
+    assert sized(128 * gib) == "24g"
+    assert sized(gib) == "1g"
+    assert default_driver_memory(str(tmp_path / "absent")) == "24g"

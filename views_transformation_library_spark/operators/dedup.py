@@ -26,7 +26,7 @@ import random
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
-from ..panel import materialize, materialize_counted
+from ..panel import local_table, materialize, materialize_counted, observed_metrics
 
 logger = logging.getLogger(__name__)
 
@@ -53,16 +53,6 @@ HOT_SHINGLE_BROADCAST_CAP = 1_000_000
 # estimate), a 6 GB build-side collect that blew
 # spark.driver.maxResultSize (r10 sweep).
 SIZES_BROADCAST_CAP = 4_000_000
-
-
-def _observed_count(obs, metric: str) -> int | None:
-    """Non-blocking read of a single COUNT metric from an Observation:
-    None until some action has populated it (probe with getRowOrEmpty —
-    the JVM getOrEmpty map NPEs via py4j before the metrics row exists)."""
-    jo = getattr(obs, "_jo", None)
-    if jo is None or jo.getRowOrEmpty().isEmpty():
-        return None
-    return int(jo.getOrEmpty().apply(metric))
 
 
 def lsh_guard_stats(df_or_obs, block: bool = False) -> dict | None:
@@ -106,22 +96,9 @@ def lsh_guard_stats(df_or_obs, block: bool = False) -> dict | None:
         # precomputed counters (ngram_jaccard r10): already exact ints,
         # available regardless of `block` or whether an action has run
         return dict(obs)
-    if not block:
-        jo = getattr(obs, "_jo", None)
-        if jo is None:  # observe() never attached (defensive)
-            return None
-        # probe with getRowOrEmpty (an Option — safe pre-action; the JVM
-        # getOrEmpty map NPEs via py4j before the metrics row exists)
-        if jo.getRowOrEmpty().isEmpty():
-            return None
-        jmap = jo.getOrEmpty()
-        raw = {
-            "skipped_rows": jmap.apply("skipped_rows"),
-            "skipped_pair_terms": jmap.apply("skipped_pair_terms"),
-            "skipped_bucket_frac": jmap.apply("skipped_bucket_frac"),
-        }
-    else:
-        raw = obs.get
+    raw = obs.get if block else observed_metrics(obs)
+    if raw is None:
+        return None
     return {
         "skipped_rows": int(raw["skipped_rows"] or 0),
         "skipped_pairs": int(raw["skipped_pair_terms"] or 0) // 2,
@@ -296,9 +273,9 @@ def ngram_jaccard_pairs(
     # must NEVER be a build side. An explicit hint on the sizes side pins
     # the build side either way; Spark's own estimate picked
     # BuildLeft(inter) at sf5 and collected 6 GB to the driver.
-    n_docs = _observed_count(docs_obs, "__docs")
-    if n_docs is None:  # no action ran yet (lazy materialize mode)
-        n_docs = df.count()
+    docs_metrics = observed_metrics(docs_obs)
+    # no action ran yet (lazy materialize mode): count directly
+    n_docs = df.count() if docs_metrics is None else int(docs_metrics["__docs"])
     if n_docs <= SIZES_BROADCAST_CAP:
         sz_a, sz_b = F.broadcast(sz_a), F.broadcast(sz_b)
     else:
@@ -554,8 +531,8 @@ def connected_components(
             if r not in roots or v < roots[r]:
                 roots[r] = v
         labels = [(v, roots[find(v)]) for v in sorted(parent)]
-        return pairs.sparkSession.createDataFrame(
-            labels, schema=f"node {id_type}, component {id_type}"
+        return local_table(
+            pairs.sparkSession, labels, f"node {id_type}, component {id_type}"
         )
     edges = (
         und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1001,21 +978,16 @@ def pagerank(
         nodes_arr, q = pagerank_longs(
             pdf["src"].to_numpy(), pdf["dst"].to_numpy(), damping, max_iters, tol
         )
-        if nodes_arr.size == 0:
-            return spark.createDataFrame(
-                [], schema=f"node {id_type}, pagerank double"
-            )
-        # Arrow frame out, mirroring the Arrow pull in: the tuple-list
-        # path pickled every row (r13 opt). Vectorized q/scale is the
-        # same correctly-rounded IEEE division as the old per-element
-        # float(qv)/scale_f — the strict gate's doubles are unchanged.
-        import pandas as pd
-
-        out_pdf = pd.DataFrame(
-            {"node": nodes_arr, "pagerank": q.astype("float64") / scale_f}
-        )
-        return spark.createDataFrame(
-            out_pdf, schema=f"node {id_type}, pagerank double"
+        # vectorized q/scale is the same correctly-rounded IEEE division
+        # as a per-element float(qv)/scale_f — the strict gate's doubles
+        # are unchanged
+        return local_table(
+            spark,
+            {
+                "node": nodes_arr.tolist(),
+                "pagerank": (q.astype("float64") / scale_f).tolist(),
+            },
+            f"node {id_type}, pagerank double",
         )
     # distributed path. Per-iteration job budget matters as much as data
     # volume (measured at sf0.1: the original loop spent 2 driver actions

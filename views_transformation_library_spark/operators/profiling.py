@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..panel import local_table
+
 _SUM_DECIMAL = "decimal(38,6)"
 
 
@@ -361,8 +363,7 @@ def approx_quantiles_hist(
         F.sum("__c").over(wo).alias("__cum"),
         F.sum("__c").over(wg).alias("__n"),
     )
-    spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_table(df.sparkSession, [(int(p),) for p in percents], "percent int")
     joined = cum.crossJoin(F.broadcast(pcts))
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     picked = joined.filter(
@@ -379,6 +380,11 @@ def approx_quantiles_hist(
         rank.alias("rank"),
         F.col("__n").alias("n"),
     )
+
+
+# column types range_buckets' affine bucket map accepts (decimal at any
+# precision and scale)
+_RANGE_DTYPES = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
 
 
 def _exact_quantiles_range(
@@ -400,29 +406,38 @@ def _exact_quantiles_range(
     if n_buckets < 1:
         raise ValueError("range_buckets must be >= 1")
     dtype = dict(df.dtypes)[col]
-    if dtype in ("string", "binary", "boolean"):
+    if dtype.split("(")[0] not in _RANGE_DTYPES:
         raise ValueError(
-            f"range_buckets needs a numeric column, got {col!r}: {dtype}"
+            f"range_buckets needs a numeric column ({', '.join(_RANGE_DTYPES)}),"
+            f" got {col!r}: {dtype}"
         )
     is_float = dtype in ("double", "float")
     base = df.filter(F.col(col).isNotNull()).select(*group_cols, col)
     v = F.col(col).cast("double")
-    nan = F.isnan(v) if is_float else F.lit(False)
-    # per-group stats over non-NaN values (Spark's max treats NaN as the
-    # greatest double, which would poison the affine map)
+    if is_float:
+        inf = F.lit(float("inf"))
+        nan, pos_inf, neg_inf = F.isnan(v), v == inf, v == -inf
+    else:
+        nan = pos_inf = neg_inf = F.lit(False)
+    finite = ~(nan | pos_inf | neg_inf)
+    # per-group stats over finite values (Spark's max treats NaN as the
+    # greatest double, and an infinite edge makes every width infinite —
+    # either would poison the affine map)
     stats = base.groupBy(*group_cols).agg(
-        F.min(F.when(~nan, v)).alias("__lo"),
-        F.max(F.when(~nan, v)).alias("__hi"),
+        F.min(F.when(finite, v)).alias("__lo"),
+        F.max(F.when(finite, v)).alias("__hi"),
         F.count(F.lit(1)).alias("__n"),
     )
     gb = base.join(F.broadcast(stats), group_cols) if group_cols else (
         base.crossJoin(F.broadcast(stats))
     )
-    # monotone bucket map: NaN → top bucket (matches sort order: NaN is
-    # greatest); degenerate lo == hi (or all-NaN: lo IS NULL) → bucket 0
+    # monotone bucket map matching the sort order -inf < finite < +inf <
+    # NaN: -inf → bucket 0, +inf and NaN → top bucket; degenerate lo == hi
+    # (or no finite value: lo IS NULL) → bucket 0
     width = (F.col("__hi") - F.col("__lo")) / F.lit(float(n_buckets))
     bucket = (
-        F.when(nan, F.lit(n_buckets - 1))
+        F.when(nan | pos_inf, F.lit(n_buckets - 1))
+        .when(neg_inf, F.lit(0))
         .when(
             F.col("__lo").isNull() | (F.col("__hi") == F.col("__lo")), F.lit(0)
         )
@@ -440,8 +455,7 @@ def _exact_quantiles_range(
     )
     wo = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy("__b")
     cum = hist.withColumn("__cum", F.sum("__bc").over(wo))
-    spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_table(df.sparkSession, [(int(p),) for p in percents], "percent int")
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     targets = (
         cum.crossJoin(F.broadcast(pcts))
@@ -587,8 +601,7 @@ def exact_quantiles(
                 F.count(F.lit(1)).over(wg).alias("__n"),
             )
         )
-    spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_table(df.sparkSession, [(int(p),) for p in percents], "percent int")
     joined = cum.crossJoin(F.broadcast(pcts))
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     picked = joined.filter(

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..panel import local_table
+
 _BUCKETS = 1 << 32
 
 
@@ -400,9 +402,7 @@ def dsir_weights(
         ((r["bucket"], r["ct"], r["cr"]) for r in counts), n_buckets, alpha
     )
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        sorted(wmap.items()), "bucket long, __q long"
-    )
+    wdf = local_table(spark, sorted(wmap.items()), "bucket long, __q long")
     per = (
         occ.join(F.broadcast(wdf), "bucket")
         .groupBy("doc", "is_target")

@@ -20,7 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..panel import materialize
+from ..panel import local_table, materialize
 
 
 def _dot(a, b):
@@ -120,8 +120,10 @@ PQ_QUERY_DRIVER_CAP = 8_192
 def _empty_topk(vectors: DataFrame, id_col: str) -> DataFrame:
     """Empty result with the top-k output schema (empty/all-null input)."""
     id_type = dict(vectors.dtypes).get(id_col, "bigint")
-    return vectors.sparkSession.createDataFrame(
-        [], schema=f"query_id {id_type}, neighbor_id {id_type}, cosine double, rank int"
+    return local_table(
+        vectors.sparkSession,
+        [],
+        f"query_id {id_type}, neighbor_id {id_type}, cosine double, rank int",
     )
 
 
@@ -211,9 +213,9 @@ def embedding_neardup_pairs(
     base = vectors.filter(_norm(F.col(vec_col)) > 0)  # zero-norm: NULL cosine, never output
     frow = base.select(vec_col).first()
     if frow is None:
-        return vectors.sparkSession.createDataFrame(
-            [], schema=f"a {dict(vectors.dtypes).get(id_col, 'bigint')},"
-                       f" b {dict(vectors.dtypes).get(id_col, 'bigint')}, cosine double"
+        id_type = dict(vectors.dtypes).get(id_col, "bigint")
+        return local_table(
+            vectors.sparkSession, [], f"a {id_type}, b {id_type}, cosine double"
         )
     unit = F.transform(
         F.col(vec_col), lambda x: x.cast("double") / _norm(F.col(vec_col))
@@ -252,7 +254,7 @@ def embedding_neardup_pairs(
         for j in radii:
             if float(np.linalg.norm(C[i] - C[j])) <= radii[i] + radii[j] + d_t:
                 admissible.append((i, j))
-    pair_tbl = vectors.sparkSession.createDataFrame(admissible, schema="bi int, bj int")
+    pair_tbl = local_table(vectors.sparkSession, admissible, "bi int, bj int")
     # verification is a block-pair COGROUPED numpy scorer: each vector
     # ships once per admissible partner block (<= n_blocks copies), never
     # once per candidate pair, and per-(bi,bj) chunked matrices score with
@@ -1856,8 +1858,8 @@ def semantic_dedup(
     frow = vectors.select(vec_col).first()
     if frow is None:
         id_type = dict(vectors.dtypes).get(id_col, "bigint")
-        return vectors.sparkSession.createDataFrame(
-            [], schema=f"{id_col} {id_type}, cluster int, keep boolean"
+        return local_table(
+            vectors.sparkSession, [], f"{id_col} {id_type}, cluster int, keep boolean"
         )
     if n_clusters is None:
         n_clusters = (
@@ -2131,7 +2133,8 @@ def _adc_table_distributed(
     dropped, as the driver loop drops them."""
     m = len(codebooks)
     spark = queries.sparkSession
-    cb = spark.createDataFrame(
+    cb = local_table(
+        spark,
         [
             (s, ci, [float(x) for x in c])
             for s, book in enumerate(codebooks)
@@ -2285,8 +2288,8 @@ def pq_topk(
                     table.append(
                         (r[id_col], s, ci, int(math.floor(acc[ci] * PQ_ADC_SCALE)))
                     )
-        adc = spark.createDataFrame(
-            table, schema=f"query_id {qid_type}, __sub int, __code int, __d2q long"
+        adc = local_table(
+            spark, table, f"query_id {qid_type}, __sub int, __code int, __d2q long"
         )
     else:
         adc = _adc_table_distributed(queries, codebooks, id_col, vec_col)

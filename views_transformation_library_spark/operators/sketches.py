@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..panel import local_table
+
 HASH_HEX = 15  # 60-bit hashes: 15 hex chars < 2^63, uniform, engine-parity
 HASH_SPACE = 1 << 60
 
@@ -229,7 +231,7 @@ def cm_estimate(
     sketch = cm_sketch(df, value_col, depth=depth, width=width)
     spark = df.sparkSession
     probe = (
-        spark.createDataFrame([(it,) for it in items], "item string")
+        local_table(spark, [(it,) for it in items], "item string")
         .select(
             "item",
             F.explode(

@@ -19,7 +19,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..panel import KEYS, TIME, UNIT, feature_cols, materialize
+from ..panel import KEYS, TIME, UNIT, feature_cols, local_table, materialize
 
 PG_STRIDE = 720  # global 0.5-degree grid stride (reference utilities.py:158)
 
@@ -107,9 +107,10 @@ def splag4d(
     # the contribution side and the target side both read the panel —
     # materialize it once instead of rebuilding it per branch
     cells = with_grid_coords(materialize(df.na.fill(0.0, subset=feats)), stride)
-    kern = spark.createDataFrame(
+    kern = local_table(
+        spark,
         kernel_offsets(kernel_inner, kernel_width, kernel_power, norm_kernel),
-        schema="dx int, dy int, w double",
+        "dx int, dy int, w double",
     )
     # neighbour source values, re-keyed by the *target* cell they contribute to
     # distinct alias names on the contribution side: both sides of the later

@@ -13,7 +13,7 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..panel import materialize
+from ..panel import local_table, materialize
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic;
 # deterministic and cheap — not a real language model by design
@@ -1043,7 +1043,7 @@ def quality_classifier_score(
     bias, threshold = float(bias), float(threshold)
 
     spark = df.sparkSession
-    wdf = spark.createDataFrame(witems, "__tok string, __w double")
+    wdf = local_table(spark, witems, "__tok string, __w double")
     tf = (
         df.select(
             F.col(id_col).alias("__uid"),
@@ -1213,7 +1213,7 @@ def bpe_train(
     counts = {r["w"]: int(r["c"]) for _, r in wc.toPandas().iterrows()}
     merges = bpe_learn(counts, num_merges, min_pair_count=min_pair_count)
     schema = "rank int, left string, right string, pair_count long"
-    return df.sparkSession.createDataFrame(merges, schema=schema)
+    return local_table(df.sparkSession, merges, schema)
 
 
 def bpe_segment_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..panel import (
     KEYS, TIME, TIME_AXIS_CAP, UNIT, UNIT_AXIS_CAP, collect_axis,
-    feature_cols, materialize, materialize_counted,
+    feature_cols, local_table, materialize, materialize_counted,
 )
 from .spatial_grid import PG_STRIDE, embed_coords
 
@@ -244,9 +244,7 @@ def temporal_tree_lag(
     inter = _temporal_interactions_cached(
         times, thetacrit, tuple(weight_functions), sigma
     )
-    inter_df = spark.createDataFrame(
-        inter, schema="tnow long, s long, e long, fn string, w double"
-    )
+    inter_df = local_table(spark, inter, "tnow long, s long, e long, fn string, w double")
     nodes = sorted({(s, e) for (_, s, e, _, _) in inter})
     # signed boundary table (r14): node interval sum cum(e-1) - cum(s-1)
     # as ONE broadcast join from the cum frame instead of a units×nodes
@@ -262,9 +260,7 @@ def temporal_tree_lag(
     bnd = [(e - 1, s, e, 1) for (s, e) in nodes] + [
         (s - 1, s, e, -1) for (s, e) in nodes
     ]
-    bnd_df = spark.createDataFrame(
-        bnd, schema="t long, s long, e long, sgn long"
-    )
+    bnd_df = local_table(spark, bnd, "t long, s long, e long, sgn long")
 
     filled = df.na.fill(0.0, subset=feats)
     w_cum = Window.partitionBy(UNIT).orderBy(TIME).rowsBetween(Window.unboundedPreceding, 0)
@@ -553,9 +549,7 @@ def spatial_tree_lag(
         # no interactions at all (e.g. single-unit panel: the only leaf is
         # the excluded self) -> all-zero lag
         return df.select(TIME, UNIT, *[F.lit(0.0).alias(c) for c in feats])
-    inter_df = spark.createDataFrame(
-        inter, schema="pgid long, lvl int, bx long, by long, w double"
-    )
+    inter_df = local_table(spark, inter, "pgid long, lvl int, bx long, by long, w double")
     levels = sorted({lvl for (_, lvl, _, _, _) in inter})
     cells = _embedded_cells(df, geo, stride, feats)
     nodevals = _level_aggregates(cells, feats, levels, geo.power, fixed_point=True)
@@ -800,10 +794,10 @@ def grid_lag(
     # with a broadcast-hash probe). Geometry-bounded: ~8·ncells² rows.
     wrows, scalar_names, column_fns = grid_weight_rows(geo.ncells, weights)
     wcol_of = {n: f"__w_{i}" for i, n in enumerate(scalar_names)}
-    wtab = spark.createDataFrame(
+    wtab = local_table(
+        spark,
         wrows,
-        schema="__k long, __d double"
-        + "".join(f", {wcol_of[n]} double" for n in scalar_names),
+        "__k long, __d double" + "".join(f", {wcol_of[n]} double" for n in scalar_names),
     )
     for i, cname in enumerate(column_fns):
         wcol_of[cname] = f"__wc_{i}"

@@ -15,9 +15,11 @@ the reference (SURVEY.md §7 "positional vs value-based lags").
 
 from __future__ import annotations
 
+import itertools
 import os
+from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TIME = "time_id"
 UNIT = "unit_id"
@@ -98,6 +100,21 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def observed_metrics(obs) -> dict | None:
+    """Non-blocking read of an ``Observation``'s metrics: None until some
+    action has populated them (or when ``observe()`` never attached).
+
+    PySpark's public ``Observation.get`` blocks until the first action, so
+    the probe goes through the JVM handle once, here: ``getRowOrEmpty`` is
+    an Option, safe before any action (the JVM ``getOrEmpty`` map NPEs via
+    py4j before the metrics row exists). Once the row exists, ``get``
+    returns at once."""
+    jo = getattr(obs, "_jo", None)
+    if jo is None or jo.getRowOrEmpty().isEmpty():
+        return None
+    return obs.get
+
+
 def materialize_counted(df: DataFrame):
     """``materialize`` plus a row count riding the SAME checkpoint job.
 
@@ -118,14 +135,96 @@ def materialize_counted(df: DataFrame):
     out = materialize(df.observe(obs, F.count(F.lit(1)).alias("__n")))
 
     def count_fn() -> int:
-        jo = getattr(obs, "_jo", None)
-        # probe with getRowOrEmpty — the JVM getOrEmpty map NPEs via py4j
-        # before the metrics row exists (r8)
-        if jo is None or jo.getRowOrEmpty().isEmpty():
-            return out.count()
-        return int(jo.getOrEmpty().apply("__n"))
+        metrics = observed_metrics(obs)
+        return out.count() if metrics is None else int(metrics["__n"])
 
     return out, count_fn
+
+
+# Python types each side-table column type accepts — the exact-type rule
+# that ``createDataFrame``'s row verifier applies to a list (``bool`` is
+# not an ``int`` here, numpy scalars are not Python numbers).
+_PY_TYPES = {
+    T.BooleanType: (bool,),
+    T.ByteType: (int,),
+    T.ShortType: (int,),
+    T.IntegerType: (int,),
+    T.LongType: (int,),
+    T.FloatType: (float,),
+    T.DoubleType: (float,),
+    T.StringType: (str,),
+    T.ArrayType: (list, tuple),
+}
+
+
+def _check_column(name: str, dtype, values) -> None:
+    """Type-check one side-table column (and, for arrays, its flattened
+    elements) by the set of Python types present: one C-level pass per
+    column instead of a verifier call per row and field."""
+    allowed = _PY_TYPES.get(type(dtype))
+    if allowed is None:
+        raise TypeError(
+            f"local_table: field {name}: unsupported type {dtype.simpleString()}"
+        )
+    bad = set(map(type, values)) - set(allowed) - {type(None)}
+    if bad:
+        raise TypeError(
+            f"local_table: field {name}: {dtype.simpleString()} can not accept "
+            f"objects of type {sorted(t.__name__ for t in bad)}"
+        )
+    if isinstance(dtype, T.ArrayType):
+        elems = itertools.chain.from_iterable(v for v in values if v is not None)
+        _check_column(f"{name}.element", dtype.elementType, list(elems))
+
+
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built side table (interaction list, weight or kernel table,
+    percent list, labels) as an Arrow-backed DataFrame.
+
+    ``rows`` is a sequence of tuples in ``schema`` order, or a mapping of
+    field name -> column values; ``schema`` is a DDL string or StructType.
+    Values are type-checked column by column with the exact-type rule of
+    ``createDataFrame`` on a list (a wrong Python type raises ``TypeError``
+    naming the field); an integer out of the field's range fails Arrow's
+    conversion and raises ``ValueError`` naming the field.
+
+    Why not ``createDataFrame`` on a list: that path verifies and pickles
+    every row into an RDD that Python worker processes decode when a job
+    first reads it. A ``pyarrow.Table`` goes to the JVM as Arrow batches:
+    under ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB
+    default) as a ``LocalRelation`` (``LocalTableScan``: its broadcast
+    launches no job and starts no Python worker, and its exact size lets
+    the planner broadcast it unhinted), above it as an RDD of Arrow
+    batches decoded in the JVM. The ``pa.Table`` path does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    )
+    names = struct.fieldNames()
+    if isinstance(rows, Mapping):
+        columns = [list(rows[n]) for n in names]
+    else:
+        rows = list(rows)
+        widths = set(map(len, rows))
+        if widths - {len(names)}:
+            raise ValueError(
+                f"local_table: rows of width {sorted(widths)} for the "
+                f"{len(names)}-field schema {struct.simpleString()}"
+            )
+        columns = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+    arrow_schema = to_arrow_schema(struct)
+    arrays = []
+    for field, afield, values in zip(struct.fields, arrow_schema, columns):
+        _check_column(field.name, field.dataType, values)
+        try:
+            arrays.append(pa.array(values, type=afield.type))
+        except (pa.ArrowInvalid, OverflowError) as exc:
+            raise ValueError(f"local_table: field {field.name}: {exc}") from exc
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
 
 
 # The PRIO-GRID unit axis is structurally bounded at 720 x 360 = 259,200

@@ -11,6 +11,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+# driver heap bounds: the 24g ceiling is the size sf1 needed (its ~60M-row
+# pair expansions OOM'd a broadcast build under 8g, r6)
+DRIVER_MEMORY_MAX_GB = 24
+DRIVER_MEMORY_MIN_GB = 1
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory`` for the host it runs on: half its
+    MemTotal in whole GiB, clamped to [1g, 24g]. Local mode runs driver
+    and executors in ONE JVM; the other half is left to the JVM's off-heap
+    use (Arrow buffers, netty, metaspace), the Python workers and the OS.
+    Without a readable MemTotal (non-Linux), the 24g ceiling."""
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEMORY_MAX_GB}g"
+    gib = kib // (2 * 1024 * 1024)
+    return f"{min(DRIVER_MEMORY_MAX_GB, max(DRIVER_MEMORY_MIN_GB, gib))}g"
+
 
 def get_spark(app_name: str = "vtl_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -27,11 +49,13 @@ def get_spark(app_name: str = "vtl_spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode: ONE JVM holds driver + all executor threads, so this
-        # bounds every shuffle/broadcast/checkpoint buffer in the process.
-        # 8g was fine through sf0.1; sf1's ~60M-row pair expansions OOM'd
-        # a broadcast build under it (r6) — the machine has 128 GiB, a
-        # real cluster sizes executors separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # bounds every shuffle/broadcast/checkpoint buffer in the process;
+        # sized from the host unless SPARK_DRIVER_MEMORY says otherwise (a
+        # real cluster sizes executors separately)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # Spark floors every file split at openCostInBytes (default 4 MiB),
         # so a multi-row-group parquet file under ~128 MiB still scans as
         # 1-2 tasks — narrow stages over a corpus-sized table then run on
