@@ -9,6 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from views_transformation_library_spark.session import CODEGEN_CACHE_ENTRIES
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -19,6 +21,7 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -12,12 +12,12 @@ def main() -> None:
     sf_dir, tag, suffix, *names = sys.argv[1:]
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.builder.master("local[8]").appName("dump_plans").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from views_transformation_library_spark.session import get_spark
+
+    spark = get_spark("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
 
     qs = entry.queries()
     for name in names:

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
 Local mode for tests/bench; the same config keys are the ones you would set
-on a real cluster (AQE on, Arrow on, sane shuffle partitioning). UTC pinned
-so timestamp-derived keys match the DuckDB oracle.
+on a real cluster (AQE on, Arrow on, sane shuffle partitioning, a codegen
+class cache that holds the registry's working set). UTC pinned so
+timestamp-derived keys match the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -15,6 +16,17 @@ from pyspark.sql import SparkSession
 # pair expansions OOM'd a broadcast build under 8g, r6)
 DRIVER_MEMORY_MAX_GB = 24
 DRIVER_MEMORY_MIN_GB = 1
+
+# spark.sql.codegen.cache.maxEntries (Spark default 100; a static conf, so
+# it is fixed at session start). Specs are served over and over, so the
+# generated classes they need are a fixed working set; at 100 entries one
+# gated_ops cycle (192 classes) evicted and recompiled 184-186 classes with
+# Janino every cycle, and the fresh classes ran interpreted until the JIT
+# compiled them again. fuzzy_dedup_keep alone generates 62-64 classes per
+# execution. The 66 bench.py headline queries at sf0.01 generate 1,078
+# distinct classes on a first pass and 34-36 more on a second (adaptive-
+# execution variants); 2048 holds all of them with headroom.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -65,6 +77,7 @@ def get_spark(app_name: str = "vtl_spark", cpus: int | None = None) -> SparkSess
         # changing nothing for cluster-scale files (bytesPerCore
         # dominates long before 256 KiB matters).
         .config("spark.sql.files.openCostInBytes", "262144")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
