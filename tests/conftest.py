@@ -45,3 +45,13 @@ def collect_panel(df, value_cols=None):
     return [
         (r["unit_id"], r["time_id"], *[r[c] for c in value_cols]) for r in rows
     ]
+
+
+def forbid_count(monkeypatch, df):
+    """Make ``DataFrame.count`` raise for the rest of the test: size gates
+    read their count off the checkpoint job, never through ``count``."""
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count called while building")
+
+    monkeypatch.setattr(type(df), "count", no_count)

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import forbid_count
 from views_transformation_library_spark.operators import (
     dedup,
     multimodal,
@@ -28,6 +29,19 @@ def docs(spark):
         (7, ""),
     ]
     return spark.createDataFrame(rows, schema="doc_id long, text string")
+
+
+def _rows_without_count(monkeypatch, build):
+    """Sorted rows of ``build()`` from a normal run and from a run with
+    ``DataFrame.count`` patched to raise. Size gates read their count off
+    the checkpoint job's Observation, so the second build must not call
+    ``count`` and must give the same rows."""
+    first = build()
+    expected = sorted(first.collect())
+    forbid_count(monkeypatch, first)
+    got = sorted(build().collect())
+    assert expected
+    return expected, got
 
 
 # ---------------------------------------------------------------------------
@@ -136,6 +150,13 @@ def test_ngram_jaccard_pairs(docs):
     assert not any({a, b} & {4, 5, 6, 7} for (a, b) in pairs)
 
 
+def test_ngram_jaccard_pairs_gate_reads_no_count(docs, monkeypatch):
+    expected, got = _rows_without_count(
+        monkeypatch, lambda: dedup.ngram_jaccard_pairs(docs, n=2, threshold=0.5)
+    )
+    assert got == expected
+
+
 def test_minhash_lsh_finds_planted_dups(docs):
     out = {(r["a"], r["b"]): r["jaccard"] for r in
            dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()}
@@ -169,6 +190,18 @@ def test_connected_components_chain_and_islands(spark):
     )
     out = {r["node"]: r["component"] for r in dedup.connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 30: 20}
+
+
+def test_connected_components_gate_reads_no_count(spark, monkeypatch):
+    # driver path: the distributed loop's per-round fixpoint check is a
+    # real count, not a size gate
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 30)], schema="a long, b long"
+    )
+    expected, got = _rows_without_count(
+        monkeypatch, lambda: dedup.connected_components(pairs)
+    )
+    assert got == expected
 
 
 def test_fuzzy_dedup_keep_end_to_end(spark):
@@ -1624,6 +1657,14 @@ def test_pagerank_deterministic(spark):
     assert a == b  # driver path is bit-reproducible
 
 
+def test_pagerank_gate_reads_no_count(spark, monkeypatch):
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
+    )
+    expected, got = _rows_without_count(monkeypatch, lambda: dedup.pagerank(edges))
+    assert got == expected
+
+
 def test_cap_per_group_deterministic_and_bounded(spark):
     from views_transformation_library_spark.operators import sampling
 
@@ -2222,6 +2263,20 @@ def test_decontaminate_min_hits(spark):
     )
     one = dedup.decontaminate(tr, ev, n=5, min_hits=3).collect()[0]
     assert one["n_hit_grams"] == 2 and not one["contaminated"]
+
+
+def test_decontaminate_gate_reads_no_count(spark, monkeypatch):
+    ev = spark.createDataFrame(
+        [(100, "zz p1 p2 p3 p4 p5 yy")], "doc_id long, text string"
+    )
+    tr = spark.createDataFrame(
+        [(1, "a b p1 p2 p3 p4 p5 c d"), (2, "a b p1 p2 p3 p4 X c d")],
+        "doc_id long, text string",
+    )
+    expected, got = _rows_without_count(
+        monkeypatch, lambda: dedup.decontaminate(tr, ev, n=5)
+    )
+    assert got == expected
 
 
 def test_duplicate_spans_positions_and_islands(spark):

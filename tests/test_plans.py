@@ -263,6 +263,34 @@ def test_no_corpus_linear_single_partition_windows():
     assert counts == {"retrieval.py": 1, "sampling.py": 2, "text.py": 3}, counts
 
 
+def test_one_pin_one_observation_reader_one_env_reader():
+    """Grep-able design invariant: the package has one way to pin a frame
+    (``panel.materialize``, the only ``localCheckpoint(`` call), one reader
+    of an Observation's private JVM handle (``panel.observed_metrics``) and
+    reads the environment only in ``session.py``. A new hand-rolled pin,
+    private-handle read or environment knob fails this test."""
+    import pathlib
+
+    import views_transformation_library_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    needles = {
+        "pin": r"localCheckpoint\(",
+        "jo": r"\b_jo\b",  # ``obs._jo`` or ``getattr(obs, "_jo")``
+        "env": r"os\.environ",
+    }
+    counts: dict[str, dict[str, int]] = {k: {} for k in needles}
+    for p in sorted(root.rglob("*.py")):
+        src = p.read_text()
+        for key, pat in needles.items():
+            n = len(re.findall(pat, src))
+            if n:
+                counts[key][str(p.relative_to(root))] = n
+    assert counts["pin"] == {"panel.py": 1}, counts
+    assert set(counts["jo"]) == {"panel.py"}, counts
+    assert set(counts["env"]) == {"session.py"}, counts
+
+
 def test_pack_windows_two_level_shard_bases(spark, monkeypatch):
     """The two-LEVEL prefix sum (shard -> supershard) must equal a global
     cumulative sum when multiple supershards exist. SHARDS_PER_SUPER is

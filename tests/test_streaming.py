@@ -7,6 +7,7 @@ import shutil
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from views_transformation_library_spark.streaming.tick import tick_time_since_stream
 
@@ -1084,3 +1085,35 @@ def test_hist_quantiles_stream_accumulates_across_batches(spark, tmp_path):
     assert first[("x", 50)] == (1, 10) and first[("x", 100)] == (1, 10)
     # after batch 1: N=20, p50 rank 10 -> still bucket 1, p100 rank 20 -> bucket 8
     assert second[("x", 50)] == (1, 20) and second[("x", 100)] == (8, 20)
+
+
+@pytest.mark.parametrize("op", ["grid_lag", "connected_components", "ngram_jaccard_pairs"])
+def test_size_gated_operators_reject_streams(spark, op):
+    """A size gate reads a row count off a checkpoint job, which a stream
+    does not have: the operator refuses a streaming frame with a
+    ValueError before any query starts."""
+    from views_transformation_library_spark.operators import dedup, trees
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    build = {
+        "grid_lag": lambda: trees.grid_lag(
+            rate.select(
+                (F.col("value") % 3).alias("time_id"),
+                (F.col("value") % 4 + 1).alias("unit_id"),
+                F.col("value").cast("double").alias("v"),
+            ),
+            5.0,
+        ),
+        "connected_components": lambda: dedup.connected_components(
+            rate.select(F.col("value").alias("a"), (F.col("value") + 1).alias("b"))
+        ),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
+            rate.select(
+                F.col("value").alias("doc_id"),
+                F.col("value").cast("string").alias("text"),
+            )
+        ),
+    }[op]
+    with pytest.raises(ValueError, match="size gate needs a batch frame"):
+        build()
+    assert not spark.streams.active

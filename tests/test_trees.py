@@ -7,12 +7,14 @@ checkable against a plain pandas cumsum.
 """
 
 import math
+import re
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
-from conftest import collect_panel, make_panel
+from conftest import collect_panel, forbid_count, make_panel
+from views_transformation_library_spark import plans
 from views_transformation_library_spark.operators import trees
 
 
@@ -288,3 +290,46 @@ def test_grid_lag_column_builder_dfunction(spark):
         got = {r["unit_id"]: r["value_colsq"] for r in res.collect()}
         for u in canned:
             assert got[u] == pytest.approx(canned[u]), u
+
+
+def _mesh_panel(spark):
+    """Three timesteps on a 4x4 cell block; threshold 5 splits some boxes."""
+    cells = [(r, c) for r in range(4) for c in range(4)]
+    return make_panel(
+        spark,
+        [(t, r * 720 + c + 1, float(t + r + c)) for t in range(3) for r, c in cells],
+    )
+
+
+def test_grid_lag_gates_read_no_count(spark, monkeypatch):
+    """The mesh-bound gate reads the panel's row count off its checkpoint
+    job: building never calls DataFrame.count, and the rows are the same."""
+    df = _mesh_panel(spark)
+    expected = sorted(trees.grid_lag(df, 5.0, 0).collect())
+    forbid_count(monkeypatch, df)
+    assert sorted(trees.grid_lag(df, 5.0, 0).collect()) == expected
+
+
+_MESH_BROADCAST_JOIN = re.compile(r"BroadcastHashJoin \[time_id#\d+L?\], \[__mt#")
+
+
+def test_grid_lag_over_cap_mesh_shuffle_joins(spark, monkeypatch):
+    """Over the mesh cap the mesh is pinned with its exact row count riding
+    the checkpoint job (no separate count), and an over-cap count keeps the
+    cells x mesh join a shuffle join. Rows and grids equal the broadcast
+    path's. Spark's own size-based broadcast is off, so a broadcast in the
+    plan can only come from the operator's hint."""
+    df = _mesh_panel(spark)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out, grids = trees.grid_lag(df, 5.0, 0, keep_grids=True)
+        assert _MESH_BROADCAST_JOIN.search(plans.physical_plan(out))
+        expected = (sorted(out.collect()), sorted(grids.collect()))
+        monkeypatch.setattr(trees, "GRID_MESH_BROADCAST_CAP", 0)
+        forbid_count(monkeypatch, df)
+        out, grids = trees.grid_lag(df, 5.0, 0, keep_grids=True)
+        assert not _MESH_BROADCAST_JOIN.search(plans.physical_plan(out))
+        assert (sorted(out.collect()), sorted(grids.collect())) == expected
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -202,8 +202,13 @@ def ngram_jaccard_pairs(
     The denominator-join gate's doc count is OBSERVED inside the shingle
     materialize job (CollectMetrics below the tokenizer) instead of a
     separate df.count() job — r10's +0.4 s/query fixed-cost gate job,
-    VERDICT r10 #7. Falls back to df.count() only if no action has run
-    (lazy materialize via SPARK_GRAFT_EAGER_MAT=0)."""
+    VERDICT r10 #7. A size gate needs a batch frame: streaming input
+    raises ValueError."""
+    if df.isStreaming:
+        raise ValueError(
+            "ngram_jaccard_pairs: the doc-count size gate needs a batch "
+            "frame, got a streaming one"
+        )
     docs_obs = Observation()
     sh = materialize(
         _shingles(
@@ -273,10 +278,7 @@ def ngram_jaccard_pairs(
     # must NEVER be a build side. An explicit hint on the sizes side pins
     # the build side either way; Spark's own estimate picked
     # BuildLeft(inter) at sf5 and collected 6 GB to the driver.
-    docs_metrics = observed_metrics(docs_obs)
-    # no action ran yet (lazy materialize mode): count directly
-    n_docs = df.count() if docs_metrics is None else int(docs_metrics["__docs"])
-    if n_docs <= SIZES_BROADCAST_CAP:
+    if int(docs_obs.get["__docs"]) <= SIZES_BROADCAST_CAP:
         sz_a, sz_b = F.broadcast(sz_a), F.broadcast(sz_b)
     else:
         sz_a, sz_b = sz_a.hint("shuffle_hash"), sz_b.hint("shuffle_hash")
@@ -501,10 +503,10 @@ def connected_components(
     # incremental scale-up strategy (1, then 4, then 16 partitions...),
     # several sequential jobs that measured 1.2-2x SLOWER than the two
     # plain jobs here (pagerank read 2.09x under the same change).
-    und, und_count = materialize_counted(
+    und, n_und = materialize_counted(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).distinct()
     )
-    if und_count() <= driver_cap:
+    if n_und <= driver_cap:
         edge_rows = und.collect()
         id_type = dict(pairs.dtypes)[a_col]
         parent: dict = {}
@@ -547,12 +549,11 @@ def connected_components(
             edges.join(labels, edges["dst"] == labels["node"])
             .select(F.col("src").alias("node"), "component")
         )
-        new_labels = (
+        new_labels = materialize(  # truncate iterative lineage
             labels.unionByName(neigh)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
         )
-        new_labels = new_labels.localCheckpoint()  # truncate iterative lineage
         changed = (
             new_labels.join(labels.withColumnRenamed("component", "__old"), "node")
             .filter(F.col("component") != F.col("__old"))
@@ -960,7 +961,7 @@ def pagerank(
     """
     # r14: the size-gate count rides the checkpoint job (observation
     # counter — no dedicated .count() job)
-    e, e_count = materialize_counted(
+    e, n_edges = materialize_counted(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
@@ -968,7 +969,7 @@ def pagerank(
     spark = edges.sparkSession
     id_type = dict(edges.dtypes)[src_col]
     scale_f = float(PR_SCALE)
-    if e_count() <= driver_cap:
+    if n_edges <= driver_cap:
         # Arrow transfer + vectorized node indexing: .collect()'s Row
         # objects cost ~5 s for 600k edges where toPandas is ~0.5 s off
         # the checkpoint. (r13: a LIMIT cap+1 fusion of gate+pull was
@@ -996,12 +997,11 @@ def pagerank(
     # (loop-invariant), the dangling mass stays a LAZY one-row aggregate
     # broadcast into the rank update, and a max|delta| check on the
     # checkpointed LONG frames gives the same early exit as the numpy path.
-    nodes_df, nodes_count = materialize_counted(
+    nodes_df, n_nodes = materialize_counted(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n_nodes = nodes_count()
     deg = materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg")))
     base = (1.0 - damping) / n_nodes * PR_SCALE  # same float as pagerank_longs
     tol_q = max(1, int(tol * PR_SCALE))
@@ -1024,7 +1024,7 @@ def pagerank(
                 ).alias("__c")
             )
         )
-        new_ranks = (
+        new_ranks = materialize(  # truncate iterative lineage
             nodes_df.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -1039,7 +1039,6 @@ def pagerank(
                     )
                 ).alias("__q"),
             )
-            .localCheckpoint()  # truncate iterative lineage
         )
         delta = (
             new_ranks.alias("n")
@@ -1147,13 +1146,13 @@ def decontaminate(
     # over the eval set (r13 opt; identical resulting gram set)
     # r14: the broadcast-gate count rides the checkpoint job (observation
     # counter — no dedicated .count() job)
-    egr, egr_count = materialize_counted(
+    egr, n_eval_grams = materialize_counted(
         _shingles(eval_df, eval_id_col, eval_text_col, n, distinct=False)
         .select("shingle")
         .distinct()
     )
     eg = egr.withColumn("__hit", F.lit(1))
-    if egr_count() <= EVAL_GRAM_BROADCAST_CAP:
+    if n_eval_grams <= EVAL_GRAM_BROADCAST_CAP:
         eg = F.broadcast(eg)
     per = (
         corpus.join(eg, "shingle", "left")

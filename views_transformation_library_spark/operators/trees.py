@@ -453,8 +453,7 @@ def _temporal_interactions_cached(
 
 
 def _level_aggregates(
-    cells: DataFrame, feats: list[str], levels: list[int], power: int,
-    fixed_point: bool = False,
+    cells: DataFrame, feats: list[str], levels: list[int], power: int
 ) -> DataFrame:
     """Per-level box aggregates in ONE shuffle: level l value = sum over
     pgids in the aligned box (== the reference's stocked node sums,
@@ -484,21 +483,19 @@ def _level_aggregates(
             F.expr(f"shiftright(__ey, {power} - __lvl)").alias("__by"),
         )
         .agg(*[
+            # grid_lag's determinism contract: quantize each cell at
+            # floor(v·SCALE) and sum longs — order- and engine-
+            # independent (see grid_lag docstring), codegen-fast.
+            # floor is ONE-SIDED: each cell under-counts by < 1/SCALE,
+            # so a rolled-up box sum sits below the true double sum by
+            # at most |box| / SCALE (worst case 259,200 / 1e10 ≈
+            # 2.6e-5 on the full grid). The bias is DEFINED SEMANTICS,
+            # not an error term: both engines compute the identical
+            # floor-long sum, so gates stay byte-strict regardless of
+            # its size. See GRID_SUM_SCALE for the Σ|v| domain bound.
             (
-                # grid_lag's determinism contract: quantize each cell at
-                # floor(v·SCALE) and sum longs — order- and engine-
-                # independent (see grid_lag docstring), codegen-fast.
-                # floor is ONE-SIDED: each cell under-counts by < 1/SCALE,
-                # so a rolled-up box sum sits below the true double sum by
-                # at most |box| / SCALE (worst case 259,200 / 1e10 ≈
-                # 2.6e-5 on the full grid). The bias is DEFINED SEMANTICS,
-                # not an error term: both engines compute the identical
-                # floor-long sum, so gates stay byte-strict regardless of
-                # its size. See GRID_SUM_SCALE for the Σ|v| domain bound.
-                (F.sum(F.floor(F.col(c) * F.lit(GRID_SUM_SCALE)))
-                 / F.lit(GRID_SUM_SCALE))
-                if fixed_point
-                else F.sum(c)
+                F.sum(F.floor(F.col(c) * F.lit(GRID_SUM_SCALE)))
+                / F.lit(GRID_SUM_SCALE)
             ).alias(c)
             for c in feats
         ])
@@ -552,7 +549,7 @@ def spatial_tree_lag(
     inter_df = local_table(spark, inter, "pgid long, lvl int, bx long, by long, w double")
     levels = sorted({lvl for (_, lvl, _, _, _) in inter})
     cells = _embedded_cells(df, geo, stride, feats)
-    nodevals = _level_aggregates(cells, feats, levels, geo.power, fixed_point=True)
+    nodevals = _level_aggregates(cells, feats, levels, geo.power)
     joined = nodevals.join(
         F.broadcast(inter_df),
         (F.col("__lvl") == F.col("lvl")) & (F.col("__bx") == F.col("bx")) & (F.col("__by") == F.col("by")),
@@ -781,7 +778,7 @@ def grid_lag(
     # targets, output grid) — materialize it once; the mesh-bound row count
     # rides the checkpoint job (r14 observation counter — no dedicated
     # .count() job)
-    df, df_count = materialize_counted(df)
+    df, n_cells = materialize_counted(df)
     spark = df.sparkSession
     pgids = collect_axis(df, UNIT, UNIT_AXIS_CAP, "unit (grid) axis")
     geo = _spatial_geometry_cached(pgids, stride)
@@ -808,9 +805,7 @@ def grid_lag(
     # one materialization of all box aggregates (rows ~= 4/3 * |cells| across
     # all levels, every feature summed side by side); every mesh build then
     # reads it for free
-    nodevals = _level_aggregates(
-        cells, feats, all_levels, geo.power, fixed_point=True
-    ).localCheckpoint()
+    nodevals = materialize(_level_aggregates(cells, feats, all_levels, geo.power))
     targets = cells.select(TIME, UNIT, "__ex", "__ey")
     out = df.select(TIME, UNIT)
     mesh_frames = []
@@ -820,13 +815,17 @@ def grid_lag(
     # panel. When that upper bound already fits, skip the per-feature
     # checkpoint+count jobs entirely (they were ~2/3 of the sf0.1 runtime —
     # driver job latency, not data). Only an inconclusive bound pays for an
-    # exact count, and only the multi-branch keep_grids path pays for a
-    # checkpoint.
-    mesh_bound = (4 * df_count()) // 3 + 1
+    # exact count (riding the mesh's checkpoint job), and otherwise only the
+    # multi-branch keep_grids path pays for a checkpoint.
+    mesh_bound = (4 * n_cells) // 3 + 1
     for c in feats:
         mesh = _grid_mesh(nodevals, c, threshold, geo)
-        if keep_grids or mesh_bound > GRID_MESH_BROADCAST_CAP:
-            # referenced from >1 branch, or needs an exact count: pin it
+        broadcast_mesh = mesh_bound <= GRID_MESH_BROADCAST_CAP
+        if not broadcast_mesh:
+            mesh, n_mesh = materialize_counted(mesh)
+            broadcast_mesh = n_mesh <= GRID_MESH_BROADCAST_CAP
+        elif keep_grids:
+            # referenced from >1 branch: pin it
             mesh = materialize(mesh)
         if keep_grids:
             mesh_frames.append(
@@ -838,12 +837,7 @@ def grid_lag(
             )
         # the mesh is what the adaptive coarsening made small — broadcast it
         # so the cells side never shuffles
-        mesh_side = (
-            F.broadcast(mesh)
-            if mesh_bound <= GRID_MESH_BROADCAST_CAP
-            or mesh.count() <= GRID_MESH_BROADCAST_CAP
-            else mesh
-        )
+        mesh_side = F.broadcast(mesh) if broadcast_mesh else mesh
         pairs = targets.join(mesh_side, F.col(TIME) == F.col("__mt")).filter(
             ~(
                 (F.col("__lvl") == geo.power)

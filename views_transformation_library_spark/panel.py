@@ -16,10 +16,9 @@ the reference (SURVEY.md §7 "positional vs value-based lags").
 from __future__ import annotations
 
 import itertools
-import os
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 TIME = "time_id"
 UNIT = "unit_id"
@@ -67,37 +66,23 @@ def materialize(df: DataFrame) -> DataFrame:
     truncates lineage — Catalyst does not reuse a duplicated upstream subplan
     across self-join branches, so without this a panel built from an
     aggregation pipeline is recomputed for every branch (measured 2-4 full
-    rebuilds per operator at sf0.1). ``eager=False``: the blocks materialize
-    inside the FIRST job that touches the frame (usually a broadcast-distinct
-    subquery) instead of a dedicated blocking job — same once-per-branch
-    compute, one less job launch per panel build (r3 A/B: lazy ≥ eager on
-    every multi-branch query, tools/exp_panel_pin.py). Lineage is truncated
-    at plan-build time either way, so iterative consumers (grid_lag) still
-    cannot OOM the analyzer. Panels are bounded by |T| x |U| rows per
-    feature, so the stored footprint is small relative to the fact data even
-    at 100 TB input; on a cluster, a bucketed persisted panel
-    (``write_bucketed``) serves the same role across *jobs*, this serves it
-    across *branches within one job*. Streaming frames pass through unchanged
-    (checkpointing is a batch concept)."""
+    rebuilds per operator at sf0.1), and iterative consumers (grid_lag, the
+    graph loops) would otherwise grow an unbounded plan. Panels are bounded
+    by |T| x |U| rows per feature, so the stored footprint is small relative
+    to the fact data even at 100 TB input; on a cluster, a bucketed
+    persisted panel (``write_bucketed``) serves the same role across *jobs*,
+    this serves it across *branches within one job*.
+
+    The checkpoint is eager (its own job): a lazy checkpoint materialized
+    inside whichever consumer job ran first, and when a broadcast-subquery
+    job raced the main job, the finisher's lineage truncation dropped the
+    upstream SQLMetric accumulators of the other job's in-flight tasks
+    ("ERROR DAGScheduler: Failed to update accumulator"), for no measured
+    speed gain (1.00x, BENCH_NOTES_r10.md). Streaming frames pass through
+    unchanged (checkpointing is a batch concept)."""
     if df.isStreaming:
         return df
-    # eager=True (default since r10). eager=False shared the
-    # materialization with the first consumer job, but when that first
-    # consumer was a broadcast-subquery job racing the main job, the
-    # finisher's doCheckpoint truncated lineage and dropped the only
-    # strong refs to upstream SQLMetric accumulators while the other
-    # job's tasks were in flight — their completion logged a non-fatal
-    # "ERROR DAGScheduler: Failed to update accumulator" on every panel
-    # query (UI metrics only; data, results, timings unaffected —
-    # root-caused r10, repro: tools/repro_accum_gc.py, 50 ERRORs lazy /
-    # 0 eager on the entry flagship). The r3 lazy-wins A/B no longer
-    # holds: the r10 counterbalanced ABBA over the 9 panel-heavy bench
-    # queries at sf0.1 is a wash (lazy 12.551 s vs eager 12.612 s,
-    # 1.00x, per-query ±4% both directions — BENCH_NOTES_r10.md), so
-    # eager buys a clean scheduler log for free. SPARK_GRAFT_EAGER_MAT=0
-    # forces the old lazy behavior (kept reachable for A/Bs).
-    eager = os.environ.get("SPARK_GRAFT_EAGER_MAT", "1") != "0"
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint()
 
 
 def observed_metrics(obs) -> dict | None:
@@ -115,30 +100,29 @@ def observed_metrics(obs) -> dict | None:
     return obs.get
 
 
-def materialize_counted(df: DataFrame):
-    """``materialize`` plus a row count riding the SAME checkpoint job.
+def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``materialize`` plus the row count, read off the SAME checkpoint job.
 
     Size-gated operators (connected_components' driver cap, pagerank's,
-    grid_lag's mesh bound, decontaminate's broadcast gate) all follow
-    materialize-then-count; the dedicated ``.count()`` job is pure driver
-    job latency — the r11 ngram_jaccard observation-counter pattern makes
-    the eager checkpoint job itself produce the count via an unnamed
-    ``Observation`` (a CollectMetrics node; it lives only in the
-    checkpointed plan, so downstream consumers read the plain RDD scan
-    with no pushdown barrier). Returns ``(materialized_df, count_fn)``;
-    ``count_fn()`` reads the observation non-blockingly and falls back to
-    a plain ``.count()`` when no action has populated it (lazy
-    materialize mode, SPARK_GRAFT_EAGER_MAT=0)."""
-    from pyspark.sql import Observation
+    grid_lag's mesh bound and over-cap mesh, decontaminate's broadcast
+    gate) all follow materialize-then-count; a dedicated ``.count()`` job
+    would be pure driver job latency. An unnamed ``Observation`` (a
+    CollectMetrics node) counts the rows inside the checkpoint job; it
+    lives only in the checkpointed plan, so downstream consumers read the
+    plain RDD scan with no pushdown barrier. The eager checkpoint has run
+    by the time ``Observation.get`` is read, so the read returns at once,
+    also for an empty frame (``__n = 0``). Returns ``(pinned_df, n)``.
 
+    A size gate needs a batch frame: streaming input raises ``ValueError``
+    (Spark rejects observations on streaming Datasets)."""
+    if df.isStreaming:
+        raise ValueError(
+            "materialize_counted: a size gate needs a batch frame, "
+            "got a streaming one"
+        )
     obs = Observation()
     out = materialize(df.observe(obs, F.count(F.lit(1)).alias("__n")))
-
-    def count_fn() -> int:
-        metrics = observed_metrics(obs)
-        return out.count() if metrics is None else int(metrics["__n"])
-
-    return out, count_fn
+    return out, int(obs.get["__n"])
 
 
 # Python types each side-table column type accepts — the exact-type rule
