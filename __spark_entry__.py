@@ -2096,19 +2096,16 @@ def _grid_lag_oracle(
         if isinstance(dopt, int)
         else {wname: trees.GRID_DFUNCTIONS[k] for wname, k in dopt.items()}
     )
-    wrows, scalar_names, _cols = trees.grid_weight_rows(geo.ncells, weights)
-    assert not _cols and list(scalar_names) == list(weights)
+    wrows = trees.grid_weight_rows(geo.ncells, weights)
     # weights ride as quoted shortest-repr strings and parse via
     # VARCHAR→DOUBLE (correctly rounded); a bare decimal literal would be
     # typed DECIMAL and DuckDB's direct DECIMAL→DOUBLE cast is lossy
     wvals = ", ".join(
-        "(" + ", ".join([str(r[0])] + [f"'{float(x)!r}'" for x in r[2:]]) + ")"
+        "(" + ", ".join([str(r[0])] + [f"'{float(x)!r}'" for x in r[1:]]) + ")"
         for r in wrows
     )
-    wnames_sql = ", ".join(f"w_{n or ''}" for n in scalar_names)
-    wcast_sql = ", ".join(
-        f"CAST(w_{n or ''} AS DOUBLE) AS w_{n or ''}" for n in scalar_names
-    )
+    wnames_sql = ", ".join(f"w_{n or ''}" for n in weights)
+    wcast_sql = ", ".join(f"CAST(w_{n or ''} AS DOUBLE) AS w_{n or ''}" for n in weights)
     feat_sel = ", ".join(feats)
     ctes = [
         f"""
@@ -2179,7 +2176,7 @@ meshc_{c} AS (
             f"CAST(sum(CAST(floor(m.val * w.w_{wname or ''} * {scale!r})"
             f" AS BIGINT)) AS BIGINT) / {scale!r}"
             f" AS v_{wname or ''}"
-            for wname in scalar_names
+            for wname in weights
         )
         kx = "(t.ex * 2.0 + 1.0 - m.cx * 2.0)"
         ky = "(t.ey * 2.0 + 1.0 - m.cy * 2.0)"
@@ -2205,7 +2202,7 @@ agg_{c} AS (
         f" AS DECIMAL(38,17)), 6)::DOUBLE + 0.0 AS "
         + (c if wname is None else f"{c}_{wname}")
         for c in feats
-        for wname in scalar_names
+        for wname in weights
     )
     joins = " ".join(
         f"LEFT JOIN agg_{c} a_{c} ON a_{c}.time_id = p.time_id AND a_{c}.unit_id = p.unit_id"

@@ -267,29 +267,22 @@ def test_grid_lag_weight_dict(spark):
 
 
 def test_grid_lag_column_builder_dfunction(spark):
-    """Legacy Column-expression weight builders still work (r6 moved the
-    canned kernels to scalar callables evaluated driver-side; a builder
-    that returns a Column is detected and evaluated over the small weight
-    table instead). 1/d² as a builder must equal canned kernel 2."""
-    from pyspark.sql import functions as F
-
+    """A reference-style scalar lambda (1/d²) equals canned kernel 2; a
+    builder that returns a pyspark Column is refused with a ValueError
+    naming the weight, before the pair aggregate is planned."""
     pgids = [lat * 720 + lon for lat in range(3) for lon in range(3)]
     rng = np.random.RandomState(5)
     rows = [(1, p, float(rng.randint(1, 10))) for p in pgids]
     df = make_panel(spark, rows)
-    out = trees.grid_lag(
-        df, 50.0, dfunctions={"colsq": lambda d: 1.0 / (d * d)}
-    )
-    # the lambda works as BOTH scalar and Column builder — force the
-    # Column route with an explicit pyspark expression
-    out2 = trees.grid_lag(
-        df, 50.0, dfunctions={"colsq": lambda d: F.lit(1.0) / F.pow(d, F.lit(2.0))}
-    )
+    out = trees.grid_lag(df, 50.0, dfunctions={"sq": lambda d: 1.0 / (d * d)})
     canned = {u: v for (u, _, v) in collect_panel(trees.grid_lag(df, 50.0, 2))}
-    for res in (out, out2):
-        got = {r["unit_id"]: r["value_colsq"] for r in res.collect()}
-        for u in canned:
-            assert got[u] == pytest.approx(canned[u]), u
+    got = {r["unit_id"]: r["value_sq"] for r in out.collect()}
+    for u in canned:
+        assert got[u] == pytest.approx(canned[u]), u
+    with pytest.raises(ValueError, match="weight 'colsq' is not a scalar callable"):
+        trees.grid_lag(
+            df, 50.0, dfunctions={"colsq": lambda d: F.lit(1.0) / F.pow(d, F.lit(2.0))}
+        )
 
 
 def _mesh_panel(spark):
@@ -311,6 +304,7 @@ def test_grid_lag_gates_read_no_count(spark, monkeypatch):
 
 
 _MESH_BROADCAST_JOIN = re.compile(r"BroadcastHashJoin \[time_id#\d+L?\], \[__mt#")
+_MESH_MERGE_JOIN = re.compile(r"SortMergeJoin \[time_id#\d+L?\], \[__mt#")
 
 
 def test_grid_lag_over_cap_mesh_shuffle_joins(spark, monkeypatch):
@@ -333,3 +327,111 @@ def test_grid_lag_over_cap_mesh_shuffle_joins(spark, monkeypatch):
         assert (sorted(out.collect()), sorted(grids.collect())) == expected
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    # at Spark's default threshold the pinned mesh's size estimate is small
+    # enough to auto-broadcast; the merge hint keeps the over-cap join a
+    # sort-merge join all the same
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        out, grids = trees.grid_lag(df, 5.0, 0, keep_grids=True)
+        plan = plans.physical_plan(out)
+        assert not _MESH_BROADCAST_JOIN.search(plan)
+        assert _MESH_MERGE_JOIN.search(plan)
+        assert (sorted(out.collect()), sorted(grids.collect())) == expected
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _hostile_panel(spark, *values, empty=False):
+    """4 units x 8 months; ``values`` replace cells 5, 6, ... (built from a
+    list, not pandas, so a NaN stays NaN rather than becoming NULL)."""
+    rows = [
+        (t, lat * 720 + lon, float(t + lat + lon))
+        for t in range(8) for lat in range(2) for lon in range(2)
+    ]
+    for i, value in enumerate(values):
+        rows[5 + i] = (*rows[5 + i][:2], value)
+    return spark.createDataFrame(
+        [] if empty else rows, "time_id long, unit_id long, value double"
+    )
+
+
+def _fields(df):
+    return [(f.name, f.dataType) for f in df.schema]
+
+
+_TREE_LAGS = {
+    "temporal_tree_lag": lambda df, bad=False: trees.temporal_tree_lag(
+        df, 0.7, "bogus" if bad else "uniform"
+    ),
+    "spatial_tree_lag": lambda df, bad=False: trees.spatial_tree_lag(
+        df, 0.9, 7 if bad else 0
+    ),
+    "grid_lag": lambda df, bad=False: trees.grid_lag(df, 5.0, 7 if bad else 0),
+}
+
+
+@pytest.mark.parametrize(
+    "case", ["empty", "nan", "+inf", "-inf", "nan,-inf", "2e9", "bad_option"]
+)
+@pytest.mark.parametrize("op", sorted(_TREE_LAGS))
+def test_tree_lags_hostile_inputs(spark, op, case):
+    """Each hostile input returns the right rows or raises a ValueError that
+    names the defect: never an ANSI overflow, a lag clamped at the long
+    edge, or an IndexError / numpy error from an empty axis. NaN reads as
+    0; the ±Inf and 2e9 cells leave the fixed-point domain (an Inf next to
+    a NaN too: Spark's max orders NaN above Inf); a bad
+    dfunction_option (an unknown weight function for the temporal tree)
+    names the allowed ones."""
+    lag = _TREE_LAGS[op]
+    if case == "empty":
+        out = lag(_hostile_panel(spark, empty=True))
+        assert _fields(out) == _fields(lag(_hostile_panel(spark)))
+        assert out.collect() == []
+        if op == "grid_lag":
+            out, grids = trees.grid_lag(
+                _hostile_panel(spark, empty=True), 5.0, keep_grids=True
+            )
+            full = trees.grid_lag(_hostile_panel(spark), 5.0, keep_grids=True)[1]
+            assert _fields(grids) == _fields(full)
+            assert out.collect() == [] and grids.collect() == []
+    elif case == "nan":
+        got = sorted(lag(_hostile_panel(spark, float("nan"))).collect())
+        assert got == sorted(lag(_hostile_panel(spark, 0.0)).collect())
+    elif case == "bad_option":
+        with pytest.raises(
+            ValueError, match=r"unknown (dfunction option 7|weight function 'bogus'); allowed"
+        ):
+            lag(_hostile_panel(spark), bad=True)
+    else:
+        values, what = {
+            "+inf": ([float("inf")], "holds ±Inf"),
+            "-inf": ([float("-inf")], "holds ±Inf"),
+            "nan,-inf": ([float("nan"), float("-inf")], "holds ±Inf"),
+            "2e9": ([2e9], r"holds \|v\| = 2e\+09"),
+        }[case]
+        with pytest.raises(
+            ValueError, match=rf"{op}: feature 'value' {what}, outside the fixed-point domain"
+        ):
+            lag(_hostile_panel(spark, *values))
+
+
+@pytest.mark.parametrize("op, value", [
+    ("temporal_tree_lag", 5e8),  # a running sum of 8 in-domain cells
+    ("spatial_tree_lag", 3e8),  # a box sum of 4 in-domain cells
+    ("grid_lag", 2e8),  # a 4-cell box term times a weight above 1
+])
+def test_tree_lags_out_of_domain_sums_raise_in_job(spark, op, value):
+    """Every cell passes the driver-side domain check, but a sum or a
+    weighted term leaves the domain inside the job: the action raises an
+    error naming the operator, never an ARITHMETIC_OVERFLOW or a lag
+    clamped at the long edge (922337203.685...)."""
+    df = make_panel(spark, [
+        (t, lat * 720 + lon, value) for t in range(8) for lat in range(2) for lon in range(2)
+    ])
+    lag = {
+        "temporal_tree_lag": lambda: trees.temporal_tree_lag(df, 0.7, "uniform"),
+        "spatial_tree_lag": lambda: trees.spatial_tree_lag(df, 10.0, 0),
+        "grid_lag": lambda: trees.grid_lag(df, 1e10, 0),
+    }[op]()
+    with pytest.raises(Exception, match=f"{op}: a term or sum leaves the fixed-point domain"):
+        lag.collect()

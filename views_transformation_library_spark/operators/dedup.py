@@ -193,7 +193,7 @@ def ngram_jaccard_pairs(
     lists (r1: unbounded reduce buffers) and ~16 s/sf1 cheaper than the
     r5 windowed-count-in-the-same-exchange plan (the window sort + a
     postings localCheckpoint cost 3.3× the whole uncapped operator while
-    dropping ZERO shingles at the entry cap — tools/exp_ngram_tiers.py,
+    dropping ZERO shingles at the entry cap — NGRAM_TIERS_SF1_r10.json,
     NGRAM_GUARD_SF1_r10.json). The tiny hot aggregate is checkpointed,
     its stats collect is BOTH the guard counters and the broadcast gate,
     and sh anti-joins it only when hot shingles exist — zero engagement

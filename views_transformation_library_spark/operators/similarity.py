@@ -984,7 +984,7 @@ TWO_LEVEL_MIN_NC = 64
 # enough supers that ANY nsp of them contain >= SUPER_COVERAGE × nprobe
 # child centroids, so probe lists are always full and near-boundary
 # children are rarely missed. 6, from the r10 measured frontier
-# (TWO_LEVEL_FRONTIER_r10.md, tools/exp_two_level_cov.py): on the
+# (TWO_LEVEL_FRONTIER_r10.md): on the
 # clustered corpus (the realistic shape) recall is IDENTICAL to the
 # flat ranking at every coverage >= 2 (supers capture real structure);
 # on the structureless gaussian corpus — the adversarial case, nothing
@@ -1324,8 +1324,8 @@ def _derived_n_centroids(df: DataFrame, bucket_target: int) -> int:
 
 
 # Default mean bucket size for the cogrouped graph family (knn_graph /
-# ann_join). 64, not 256: the committed frontier (ANN_FRONTIER_r08.md,
-# tools/exp_ann_scale.py) shows finer buckets strictly dominate at every
+# ann_join). 64, not 256: the committed frontier (ANN_FRONTIER_r08.md)
+# shows finer buckets strictly dominate at every
 # fixed pair budget on the structureless synthetic corpus — at sf1 and
 # ~10M pairs, bucket 64 (nc=313, np=8) reaches recall 0.303 vs bucket 256
 # (nc=79, np=2) at 0.193; at ~20M pairs 0.431 vs 0.303 — because a finer
@@ -1539,7 +1539,7 @@ def _cogrouped_bucket_topk(
         # rows within TOPK_MARGIN of each query's k-th best so far; queries
         # with fewer than k candidates keep everything. Pure numpy lexsort
         # (r5): the pandas groupby().nlargest() formulation cost 1.34x on
-        # even buckets (tools/exp_knn_prune.py interleaved A/B) — this
+        # even buckets (interleaved A/B, BENCH_NOTES_r05.md) — this
         # keeps identical semantics (kth best = value at in-group rank k-1
         # descending == min of the top-k) at a fraction of the constant.
         if pdf.empty:

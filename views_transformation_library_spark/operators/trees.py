@@ -16,6 +16,12 @@ path stays set-based:
     level-by-level join over the same box aggregates; the weighted sum is a
     time-equi-join of cells × mesh (the mesh is what aggregation made small).
 
+Hostile inputs, the same for all three lags: NaN reads as 0 (as in the
+reference); a feature holding ±Inf, or a cell past the fixed-point domain
+of the sums (_fixed_sum, _check_domain), raises ValueError naming the
+operator and the column; an empty panel returns an empty frame with the
+output schema (and an empty mesh frame for ``grid_lag(keep_grids=True)``).
+
 Driver-side collections are limited to the distinct time axis and the
 distinct unit/pgid set — both bounded (times: thousands; pgids: ≤ 259,200 on
 the reference's global 0.5° grid) regardless of fact-table size.
@@ -32,15 +38,102 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
-from functools import lru_cache
+from functools import lru_cache, reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
 from ..panel import (
     KEYS, TIME, TIME_AXIS_CAP, UNIT, UNIT_AXIS_CAP, collect_axis,
     feature_cols, local_table, materialize, materialize_counted,
 )
 from .spatial_grid import PG_STRIDE, embed_coords
+
+# ---------------------------------------------------------------------------
+# fixed-point sums, shared by the three tree lags
+
+# the scale of the tree lags' fixed-point sums (_fixed_sum)
+GRID_SUM_SCALE = 1e10
+# floor(x) of a double x at or past ±2^63 saturates to the long edge
+_LONG_EDGE = 2.0**63
+
+
+def _fixed_sum(term: Column, op: str, over: WindowSpec | None = None) -> Column:
+    """Σ floor(term·GRID_SUM_SCALE) / GRID_SUM_SCALE: every sum of the tree
+    lags (box and interval sums, weighted roll-ups) goes through here.
+
+    Why fixed point: a double sum depends on its summation order —
+    partition order, hash-aggregate order, DuckDB's segment-tree frame
+    aggregates (a running double window sum diverged at sf1's 3000-step
+    histories) — so its low bits differ across runs and engines, and a
+    row straddling the 6dp output round fails the byte-strict oracle.
+    floor(term·SCALE) is exact IEEE (multiply + floor, no rounding-mode
+    ambiguity), integer adds commute and the long/SCALE division is
+    correctly rounded, so the sum is bit-identical across partition
+    orders, runs and engines, at codegen'd long-sum speed (a
+    DECIMAL(38,18) sum was 3x slower: Spark's double->decimal cast
+    string-formats per row). floor is one-sided: each term under-counts
+    by < 1/SCALE, orders below the 6dp round; both engines compute the
+    same floor-long sum, so that bias is defined semantics, not an error.
+
+    Domain: a long holds |x| < 2^63, so |term| and |sum| < ~9.2e8 at
+    SCALE 1e10. floor saturates past it and a long sum overflows (an ANSI
+    ARITHMETIC_OVERFLOW, or a silent wrap with ANSI off); here both raise
+    instead (``raise_error`` naming ``op``: a guarded floor, and try_sum's
+    NULL on overflow). The operators also refuse ±Inf cells and cells past
+    the bound on the driver before any sum runs (_check_domain).
+
+    ``over`` makes it a running window sum left in scaled longs, so
+    differences of it stay exact; the caller divides by GRID_SUM_SCALE."""
+    guard = F.raise_error(F.lit(
+        f"{op}: a term or sum leaves the fixed-point domain "
+        f"|x| < 2^63 / GRID_SUM_SCALE = {_LONG_EDGE / GRID_SUM_SCALE:.6g}"
+    ))
+    scaled = term * F.lit(GRID_SUM_SCALE)
+    total = F.try_sum(
+        F.when(F.abs(scaled) < F.lit(_LONG_EDGE), F.floor(scaled)).otherwise(guard)
+    )
+    if over is not None:
+        return F.coalesce(total.over(over), guard)
+    return F.coalesce(total, guard) / F.lit(GRID_SUM_SCALE)
+
+
+def _abs_max(feats: list[str]) -> list[Column]:
+    """Per feature max |v|, observed on the panel pin; NaN reads as the 0 the
+    operators fill it with (Spark orders NaN above every number)."""
+    return [
+        F.max(F.abs(F.nanvl(F.col(c), F.lit(0.0)))).alias(f"__vmax{i}")
+        for i, c in enumerate(feats)
+    ]
+
+
+def _check_domain(op: str, feats: list[str], vmax: list, weights) -> None:
+    """Refuse a feature whose cells leave the fixed-point domain of
+    _fixed_sum: a ±Inf cell, or max|v| · max(1, max|w|) · GRID_SUM_SCALE
+    >= 2^63 (cells are summed unweighted too: box and interval sums)."""
+    wmax = max(1.0, max(map(abs, weights), default=0.0))
+    for c, m in zip(feats, vmax):
+        if m is not None and m * wmax * GRID_SUM_SCALE >= _LONG_EDGE:
+            what = "holds ±Inf" if math.isinf(m) else f"holds |v| = {m:.6g}"
+            raise ValueError(
+                f"{op}: feature {c!r} {what}, outside the fixed-point domain "
+                f"|v| < 2^63 / (GRID_SUM_SCALE · max(1, max|w| = {wmax:.6g})) "
+                f"= {_LONG_EDGE / GRID_SUM_SCALE / wmax:.6g}"
+            )
+
+
+def _zeros(df: DataFrame, names: list[str]) -> DataFrame:
+    """The panel's (time, unit) keys with an all-zero lag per output name."""
+    return df.select(TIME, UNIT, *[F.lit(0.0).alias(n) for n in names])
+
+
+def _complete(df: DataFrame, results: list[DataFrame], names: list[str]) -> DataFrame:
+    """Every (time, unit) of the panel, left-joined to the lag results; a key
+    with no result row (no interaction) gets 0."""
+    out = df.select(TIME, UNIT)
+    for res in results:
+        out = out.join(res, KEYS, "left")
+    return out.na.fill(0.0, subset=names)
+
 
 # ---------------------------------------------------------------------------
 # temporal tree geometry (reference temporal_tree.py:110-352)
@@ -197,7 +290,7 @@ class TemporalTreeGeometry:
         if fn == "ramp":
             lag = tnow - mid + 0.5
             return max(1.0 - lag / sigma, 0.0)
-        raise KeyError(f"unknown weight function {fn!r}")
+        raise ValueError(f"unknown weight function {fn!r}; allowed expon, oneovert, ramp, sigmoid, uniform")
 
     def interactions(
         self, thetacrit: float, weight_functions: list[str], sigma: float
@@ -235,15 +328,19 @@ def temporal_tree_lag(
     """
     if isinstance(weight_functions, str):
         weight_functions = [weight_functions]
+    op = "temporal_tree_lag"
     feats = feature_cols(df)
+    out_names = [c if len(weight_functions) == 1 else f"{c}_{fn}"
+                 for c in feats for fn in weight_functions]
     spark = df.sparkSession
     # three plan branches reference the panel (times collect, cum window,
     # grid) — materialize it once
-    df = materialize(df)
+    df, n, *vmax = materialize_counted(df, *_abs_max(feats))
+    if n == 0:
+        return _zeros(df, out_names)
     times = collect_axis(df, TIME, TIME_AXIS_CAP, "time axis")
-    inter = _temporal_interactions_cached(
-        times, thetacrit, tuple(weight_functions), sigma
-    )
+    inter = _temporal_interactions_cached(times, thetacrit, tuple(weight_functions), sigma)
+    _check_domain(op, feats, vmax, (r[-1] for r in inter))
     inter_df = local_table(spark, inter, "tnow long, s long, e long, fn string, w double")
     nodes = sorted({(s, e) for (_, s, e, _, _) in inter})
     # signed boundary table (r14): node interval sum cum(e-1) - cum(s-1)
@@ -257,29 +354,13 @@ def temporal_tree_lag(
     # range), so the row set is unchanged; the long arithmetic
     # sum(sign·cum) == cum(e-1) - cum(s-1) is exact integer math —
     # byte-identical output.
-    bnd = [(e - 1, s, e, 1) for (s, e) in nodes] + [
-        (s - 1, s, e, -1) for (s, e) in nodes
-    ]
+    bnd = [(e - 1, s, e, 1) for (s, e) in nodes] + [(s - 1, s, e, -1) for (s, e) in nodes]
     bnd_df = local_table(spark, bnd, "t long, s long, e long, sgn long")
 
     filled = df.na.fill(0.0, subset=feats)
     w_cum = Window.partitionBy(UNIT).orderBy(TIME).rowsBetween(Window.unboundedPreceding, 0)
-    # fixed-point cum sums (r6): a running DOUBLE window sum is
-    # deterministic per engine but NOT engine-identical — DuckDB
-    # evaluates frame aggregates with a segment tree (different
-    # summation tree than a running fold), which diverged at sf1's
-    # 3000-step histories. floor(v·SCALE) longs commute under ANY
-    # evaluation tree; the long/SCALE division below is correctly
-    # rounded on both engines.
     cum = filled.select(
-        TIME,
-        UNIT,
-        *[
-            F.sum(F.floor(F.col(c) * F.lit(GRID_SUM_SCALE)).cast("long"))
-            .over(w_cum)
-            .alias(f"__cum_{c}")
-            for c in feats
-        ],
+        TIME, UNIT, *[_fixed_sum(F.col(c), op, over=w_cum).alias(f"__cum_{c}") for c in feats]
     )
     # node interval sums: one broadcast probe of the signed boundary table
     # (sum of ≤2 signed longs per (unit, node) == cum(e-1) - cum(s-1));
@@ -289,59 +370,40 @@ def temporal_tree_lag(
     node_sums = (
         cum.join(F.broadcast(bnd_df), F.col(TIME) == F.col("t"))
         .groupBy(UNIT, "s", "e")
-        .agg(
-            *[
-                (
-                    F.sum(F.col(f"__cum_{c}") * F.col("sgn"))
-                    / F.lit(GRID_SUM_SCALE)
-                ).alias(c)
-                for c in feats
-            ]
-        )
+        .agg(*[
+            (F.sum(F.col(f"__cum_{c}") * F.col("sgn")) / F.lit(GRID_SUM_SCALE)).alias(c)
+            for c in feats
+        ])
     )
     joined = node_sums.join(F.broadcast(inter_df), ["s", "e"])
-    aggs = []
-    out_names = []
-    for c in feats:
-        for fn in weight_functions:
-            name = c if len(weight_functions) == 1 else f"{c}_{fn}"
-            out_names.append(name)
-            # fixed-point long sum (r6, the grid_lag determinism contract,
-            # extended here with spatial_tree_lag): node-sum doubles are
-            # engine-identical (running-frame cum diffs × driver-literal
-            # weights), floor(term·SCALE) is exact IEEE, long adds commute
-            # — bit-identical across partition orders and engines
-            aggs.append(
-                (
-                    F.sum(
-                        F.when(
-                            F.col("fn") == fn,
-                            F.floor(F.col(c) * F.col("w") * F.lit(GRID_SUM_SCALE)).cast("long"),
-                        ).otherwise(F.lit(0).cast("long"))
-                    )
-                    / F.lit(GRID_SUM_SCALE)
-                ).alias(name)
-            )
-    res = joined.groupBy(F.col("tnow").alias(TIME), F.col(UNIT)).agg(*aggs)
-    # complete grid: the last timestep (and any empty walk) yields zeros
-    grid = df.select(TIME, UNIT)
-    out = grid.join(res, [TIME, UNIT], "left").na.fill(0.0, subset=out_names)
-    return out
+    terms = [F.when(F.col("fn") == fn, F.col(c) * F.col("w")).otherwise(0.0)
+             for c in feats for fn in weight_functions]
+    res = joined.groupBy(F.col("tnow").alias(TIME), F.col(UNIT)).agg(
+        *[_fixed_sum(t, op).alias(name) for t, name in zip(terms, out_names)]
+    )
+    # the last timestep (and any empty walk) has no result row: zeros
+    return _complete(df, [res], out_names)
 
 
 # ---------------------------------------------------------------------------
 # spatial tree geometry (reference spatial_tree.py:160-476)
 
 
-def _dfunction(option: int):
-    """Distance weightings (reference `get_dfunctions`, spatial_tree.py:48-79)."""
-    if option == 0:
-        return lambda d: 1.0 / math.log(1.0 + d)
-    if option == 1:
-        return lambda d: 1.0 / d
-    if option == 2:
-        return lambda d: 1.0 / (d * d)
-    raise ValueError(f"unknown dfunction option {option}; allowed 0, 1, 2")
+# the reference's canned distance kernels (`get_dfunctions`,
+# spatial_tree.py:48-79) as scalar callables (float distance -> float
+# weight), the form of the reference's ``dfunctions`` dict; keyed by
+# ``dfunction_option``
+GRID_DFUNCTIONS = {
+    0: lambda d: 1.0 / math.log(1.0 + d),
+    1: lambda d: 1.0 / d,
+    2: lambda d: 1.0 / (d * d),
+}
+
+
+def _kernel(option):
+    if option not in GRID_DFUNCTIONS:
+        raise ValueError(f"unknown dfunction option {option!r}; allowed {sorted(GRID_DFUNCTIONS)}")
+    return GRID_DFUNCTIONS[option]
 
 
 class SpatialTreeGeometry:
@@ -396,7 +458,7 @@ class SpatialTreeGeometry:
         theta = size/d > thetacrit; d uses the reference's componentwise
         +0.01 nudge before the norm (spatial_tree.py:327-328); the target's
         own leaf is excluded."""
-        dfun = _dfunction(dfunction_option)
+        dfun = _kernel(dfunction_option)
         rows = []
         for p in self.pgids:
             tx, ty = self.elon[p] + 0.5, self.elat[p] + 0.5
@@ -453,7 +515,7 @@ def _temporal_interactions_cached(
 
 
 def _level_aggregates(
-    cells: DataFrame, feats: list[str], levels: list[int], power: int
+    cells: DataFrame, feats: list[str], levels: list[int], power: int, op: str
 ) -> DataFrame:
     """Per-level box aggregates in ONE shuffle: level l value = sum over
     pgids in the aligned box (== the reference's stocked node sums,
@@ -482,24 +544,7 @@ def _level_aggregates(
             F.expr(f"shiftright(__ex, {power} - __lvl)").alias("__bx"),
             F.expr(f"shiftright(__ey, {power} - __lvl)").alias("__by"),
         )
-        .agg(*[
-            # grid_lag's determinism contract: quantize each cell at
-            # floor(v·SCALE) and sum longs — order- and engine-
-            # independent (see grid_lag docstring), codegen-fast.
-            # floor is ONE-SIDED: each cell under-counts by < 1/SCALE,
-            # so a rolled-up box sum sits below the true double sum by
-            # at most |box| / SCALE (worst case 259,200 / 1e10 ≈
-            # 2.6e-5 on the full grid). The bias is DEFINED SEMANTICS,
-            # not an error term: both engines compute the identical
-            # floor-long sum, so gates stay byte-strict regardless of
-            # its size. See GRID_SUM_SCALE for the Σ|v| domain bound.
-            (
-                F.sum(F.floor(F.col(c) * F.lit(GRID_SUM_SCALE)))
-                / F.lit(GRID_SUM_SCALE)
-            ).alias(c)
-            for c in feats
-        ])
-        .select(TIME, "__lvl", "__bx", "__by", *feats)
+        .agg(*[_fixed_sum(F.col(c), op).alias(c) for c in feats])
     )
 
 
@@ -525,46 +570,36 @@ def spatial_tree_lag(
     Plan: static interaction table (geometry only, reusable across all
     times/features) broadcast-joined to per-level box aggregates; one final
     hash aggregate per (time, pgid). No per-time Python, no quadtree on the
-    data path.
-
-    Determinism (r6, the grid_lag contract extended here after a 1-row
-    sf1 strict failure): both aggregates are fixed-point long sums —
-    box values quantize each cell at floor(v·GRID_SUM_SCALE), the
-    weighted lag quantizes each box·w term the same way. Terms are
-    engine-identical (exact long/SCALE divisions × driver-literal
-    weights), floor is exact IEEE, integer adds commute — bit-identical
-    across partition orders, runs, and engines."""
+    data path. Both aggregates are fixed-point sums (_fixed_sum), so the
+    lag is bit-identical across partition orders, runs and engines."""
+    op = "spatial_tree_lag"
     feats = feature_cols(df)
     spark = df.sparkSession
     # three plan branches reference the panel (pgid collect, box aggregates,
     # output grid) — materialize it once
-    df = materialize(df)
+    df, n, *vmax = materialize_counted(df, *_abs_max(feats))
+    if n == 0:
+        return _zeros(df, feats)
     pgids = collect_axis(df, UNIT, UNIT_AXIS_CAP, "unit (grid) axis")
     geo = _spatial_geometry_cached(pgids, stride)
     inter = _spatial_interactions_cached(pgids, stride, thetacrit, dfunction_option)
+    _check_domain(op, feats, vmax, (r[-1] for r in inter))
     if not inter:
         # no interactions at all (e.g. single-unit panel: the only leaf is
         # the excluded self) -> all-zero lag
-        return df.select(TIME, UNIT, *[F.lit(0.0).alias(c) for c in feats])
+        return _zeros(df, feats)
     inter_df = local_table(spark, inter, "pgid long, lvl int, bx long, by long, w double")
     levels = sorted({lvl for (_, lvl, _, _, _) in inter})
     cells = _embedded_cells(df, geo, stride, feats)
-    nodevals = _level_aggregates(cells, feats, levels, geo.power)
+    nodevals = _level_aggregates(cells, feats, levels, geo.power, op)
     joined = nodevals.join(
         F.broadcast(inter_df),
         (F.col("__lvl") == F.col("lvl")) & (F.col("__bx") == F.col("bx")) & (F.col("__by") == F.col("by")),
     )
     res = joined.groupBy(TIME, F.col("pgid").alias(UNIT)).agg(
-        *[
-            (
-                F.sum(F.floor(F.col(c) * F.col("w") * F.lit(GRID_SUM_SCALE)).cast("long"))
-                / F.lit(GRID_SUM_SCALE)
-            ).alias(c)
-            for c in feats
-        ]
+        *[_fixed_sum(F.col(c) * F.col("w"), op).alias(c) for c in feats]
     )
-    grid = df.select(TIME, UNIT)
-    return grid.join(res, KEYS, "left").na.fill(0.0, subset=feats)
+    return _complete(df, [res], feats)
 
 
 def _grid_mesh(nodevals: DataFrame, c: str, threshold: float, geo: SpatialTreeGeometry) -> DataFrame:
@@ -622,18 +657,6 @@ def _grid_mesh(nodevals: DataFrame, c: str, threshold: float, geo: SpatialTreeGe
     )
 
 
-# the reference's canned distance kernels (spatial_tree.py dfunction_option
-# family) as SCALAR python callables — the same shape the reference's
-# ``dfunctions`` dict uses. grid_lag evaluates them driver-side over the
-# finite distance set of the grid geometry (see _grid_weight_keys), so the
-# weights both engines consume are the same literal doubles.
-GRID_DFUNCTIONS = {
-    0: lambda d: 1.0 / math.log(1.0 + d),
-    1: lambda d: 1.0 / d,
-    2: lambda d: 1.0 / (d * d),
-}
-
-
 @lru_cache(maxsize=8)
 def _grid_weight_keys(ncells: int) -> tuple[int, ...]:
     """Every possible squared-distance key k = (2dx)² + (2dy)² between a
@@ -658,44 +681,36 @@ def _grid_weight_keys(ncells: int) -> tuple[int, ...]:
     return tuple(sorted(int(k) for k in ks))
 
 
-def grid_weight_rows(
-    ncells: int, weights: dict, _probe: float = 2.0
-) -> tuple[list[tuple], list[str], dict]:
-    """(rows, scalar_names, column_builders): the k→weight table for every
-    weight fn that is a SCALAR callable (python float → float; the canned
-    GRID_DFUNCTIONS and any reference-style dfunction). Column-expression
-    builders (legacy API) are returned separately for engine-side
-    evaluation over the small table — they keep working, but only scalar
-    weights carry the cross-engine byte-determinism guarantee."""
-    scalar_fns, column_fns = {}, {}
+def grid_weight_rows(ncells: int, weights: dict) -> list[tuple]:
+    """The k→weight table: one row (k, w_1, ..., w_m) per squared-distance
+    key of the geometry, one weight per ``weights`` entry in order.
+
+    Each weight is a scalar callable (float distance → float weight, the
+    form of GRID_DFUNCTIONS and of the reference's ``dfunctions``), run
+    here once per distinct distance so both engines read the same literal
+    doubles. A weight that returns anything but a finite number (a pyspark
+    Column, say) raises ``ValueError`` naming it."""
+    keys = _grid_weight_keys(ncells)
+    dists = [math.sqrt(k) / 2.0 for k in keys]
+    columns = []
     for wname, wfn in weights.items():
         try:
-            is_scalar = isinstance(wfn(_probe), (int, float))
-        except Exception:
-            is_scalar = False
-        (scalar_fns if is_scalar else column_fns)[wname] = wfn
-    rows = []
-    for k in _grid_weight_keys(ncells):
-        d = math.sqrt(k) / 2.0
-        rows.append((k, d, *[float(fn(d)) for fn in scalar_fns.values()]))
-    return rows, list(scalar_fns), column_fns
+            column = [float(wfn(d)) for d in dists]
+            if not all(map(math.isfinite, column)):
+                raise ValueError("it returned a non-finite weight")
+        except (TypeError, ValueError) as exc:
+            raise ValueError(
+                f"grid_lag: weight {wname!r} is not a scalar callable from a float "
+                f"distance to a finite float weight ({exc})"
+            ) from exc
+        columns.append(column)
+    return list(zip(keys, *columns))
 
-# fixed-point scale for grid_lag's weighted pair sums: terms quantize at
-# floor(term * SCALE) and accumulate as longs (order-independent, engine-
-# identical, codegen-fast). Domain bound (caller contract): every partial
-# sum must satisfy Σ|term| · SCALE < 2^63, i.e. |Σterm| < ~9.2e8 at the
-# default 1e10 — comfortably above any count/intensity panel (sf1 grid
-# sums are ~1e5) but NOT above arbitrary magnitudes; lower SCALE for
-# extreme-magnitude panels. The failure mode is LOUD, never corrupt:
-# this Spark build runs ANSI mode, so a long-sum overflow raises
-# ARITHMETIC_OVERFLOW at runtime instead of wrapping (and DuckDB's
-# BIGINT sum likewise errors), so a violated bound cannot silently
-# produce wrong lag values on either engine.
-GRID_SUM_SCALE = 1e10
 
 # grid_lag broadcasts each per-feature mesh when its (upper-bounded or
 # exact) row count is at or below this; past it the cells-x-mesh join is a
-# plain shuffle join. Module-level so the over-cap bench/test can force the
+# sort-merge join, hinted so Spark's own size estimate of the pinned mesh
+# cannot broadcast it either. Module-level so the over-cap bench/test can force the
 # non-broadcast path on small data (tools/bench_overcap.py).
 #
 # The mesh row count scales LINEARLY with the panel (one mesh per
@@ -738,9 +753,9 @@ def grid_lag(
 
     ``dfunctions`` mirrors the reference's arbitrary weight-function dict
     (`get_grid_lag`'s ``dfunctions``, spatial_tree.py:95-96): a mapping of
-    name → Column-expression builder (distance Column → weight Column, the
-    Spark-native re-expression of the reference's scalar callables; the
-    canned kernels are exported as ``GRID_DFUNCTIONS``). All weights for a
+    name → scalar callable (float distance → finite float weight, the
+    reference's form; the canned kernels are ``GRID_DFUNCTIONS``). A weight
+    that returns anything else raises ``ValueError`` naming it. All weights for a
     feature are computed in the SAME pair aggregate — extra weight
     functions add agg expressions, not shuffles. Output columns are
     ``{feature}_{name}`` (the reference's own multi-weight path is broken:
@@ -755,64 +770,55 @@ def grid_lag(
     too via its nleaf>0 check; a negative threshold would diverge).
 
     Determinism (r6): the output is bit-identical across partition
-    orders, run repeats, and engines — double hash-aggregate sums are
-    none of those. Three mechanisms: (1) level box sums quantize each
-    cell at floor(v·GRID_SUM_SCALE) and accumulate as longs (exact
-    integer adds commute); (2) distance weights are evaluated ONCE per distinct distance
-    in the driver over the finite geometry key set (k = (2dx)²+(2dy)² is
-    an exact integer) and broadcast — no engine transcendental (libm ln
-    differs in the last ulp across engines) ever touches the pair path;
-    (3) the weighted pair sums quantize each term at
-    floor(term·GRID_SUM_SCALE) and accumulate as longs. Weight-table
-    size is ~8·ncells² rows — geometry-bounded, data-independent.
+    orders, run repeats, and engines. The box sums and the weighted pair
+    sums are fixed-point sums (_fixed_sum), and the distance weights are
+    evaluated ONCE per distinct distance in the driver over the finite
+    geometry key set (k = (2dx)²+(2dy)² is an exact integer) and
+    broadcast — no engine transcendental (libm ln differs in the last ulp
+    across engines) ever touches the pair path. Weight-table size is
+    ~8·ncells² rows — geometry-bounded, data-independent.
     """
     if split_criterion != "min":
         raise ValueError(f"unknown split criterion {split_criterion!r}; allowed: 'min'")
+    op = "grid_lag"
     feats = feature_cols(df)
     weights = (
-        dict(dfunctions)
-        if dfunctions is not None
-        else {None: GRID_DFUNCTIONS[dfunction_option]}
+        dict(dfunctions) if dfunctions is not None else {None: _kernel(dfunction_option)}
     )
+    names = {c: [c if w is None else f"{c}_{w}" for w in weights] for c in feats}
+    out_names = [name for c in feats for name in names[c]]
     # four plan branches reference the panel (pgid collect, box aggregates,
     # targets, output grid) — materialize it once; the mesh-bound row count
-    # rides the checkpoint job (r14 observation counter — no dedicated
-    # .count() job)
-    df, n_cells = materialize_counted(df)
+    # and the domain check's max |v| ride the checkpoint job
+    df, n_cells, *vmax = materialize_counted(df, *_abs_max(feats))
+    if n_cells == 0:
+        out = _zeros(df, out_names)
+        grids = df.select(
+            F.lit("").alias("feature"), TIME, F.lit(0).alias("__lvl"),
+            *[F.lit(0).cast("long").alias(k) for k in ("__bx", "__by")],
+        )
+        return (out, grids) if keep_grids else out
     spark = df.sparkSession
     pgids = collect_axis(df, UNIT, UNIT_AXIS_CAP, "unit (grid) axis")
     geo = _spatial_geometry_cached(pgids, stride)
-    # weight table: every possible cell↔box distance is a half-integer
-    # pair, so k = (2dx)²+(2dy)² is an exact integer key and the weight
-    # kernels evaluate ONCE per distinct distance in the driver — the
-    # engine never runs a transcendental on the pair path (ln differs
-    # between libms in the last ulp; driver literals make the weighted
-    # terms byte-identical across engines AND replace per-pair ln/sqrt
-    # with a broadcast-hash probe). Geometry-bounded: ~8·ncells² rows.
-    wrows, scalar_names, column_fns = grid_weight_rows(geo.ncells, weights)
-    wcol_of = {n: f"__w_{i}" for i, n in enumerate(scalar_names)}
-    wtab = local_table(
-        spark,
-        wrows,
-        "__k long, __d double" + "".join(f", {wcol_of[n]} double" for n in scalar_names),
-    )
-    for i, cname in enumerate(column_fns):
-        wcol_of[cname] = f"__wc_{i}"
-        wtab = wtab.withColumn(wcol_of[cname], column_fns[cname](F.col("__d")))
-    wtab = F.broadcast(wtab.drop("__d"))
+    # the k→weight table (see Determinism above); its broadcast-hash probe
+    # also replaces a per-pair ln/sqrt
+    wrows = grid_weight_rows(geo.ncells, weights)
+    _check_domain(op, feats, vmax, (w for r in wrows for w in r[1:]))
+    wschema = "__k long" + "".join(f", __w_{i} double" for i in range(len(weights)))
+    wtab = F.broadcast(local_table(spark, wrows, wschema))
     cells = _embedded_cells(df, geo, stride, feats)
     all_levels = list(range(geo.power + 1))
     # one materialization of all box aggregates (rows ~= 4/3 * |cells| across
     # all levels, every feature summed side by side); every mesh build then
     # reads it for free
-    nodevals = materialize(_level_aggregates(cells, feats, all_levels, geo.power))
+    nodevals = materialize(_level_aggregates(cells, feats, all_levels, geo.power, op))
     targets = cells.select(TIME, UNIT, "__ex", "__ey")
-    out = df.select(TIME, UNIT)
+    results = []
     mesh_frames = []
-    out_names: list[str] = []
     # Broadcast gate without running the mesh: Σ_t |mesh_t| <= Σ_l |boxes_l|
-    # ~= 4/3 |cells|, and |cells| is a free RDD count on the materialized
-    # panel. When that upper bound already fits, skip the per-feature
+    # ~= 4/3 |cells|, and |cells| rides the panel pin. When that upper
+    # bound already fits, skip the per-feature
     # checkpoint+count jobs entirely (they were ~2/3 of the sf0.1 runtime —
     # driver job latency, not data). Only an inconclusive bound pays for an
     # exact count (riding the mesh's checkpoint job), and otherwise only the
@@ -828,16 +834,13 @@ def grid_lag(
             # referenced from >1 branch: pin it
             mesh = materialize(mesh)
         if keep_grids:
-            mesh_frames.append(
-                mesh.select(
-                    F.lit(c).alias("feature"),
-                    F.col("__mt").alias(TIME),
-                    "__lvl", "__bx", "__by",
-                )
-            )
+            mesh_frames.append(mesh.select(
+                F.lit(c).alias("feature"), F.col("__mt").alias(TIME), "__lvl", "__bx", "__by"
+            ))
         # the mesh is what the adaptive coarsening made small — broadcast it
-        # so the cells side never shuffles
-        mesh_side = F.broadcast(mesh) if broadcast_mesh else mesh
+        # so the cells side never shuffles; past the cap, a sort-merge join
+        # (the hint keeps Spark from broadcasting the pinned mesh itself)
+        mesh_side = F.broadcast(mesh) if broadcast_mesh else mesh.hint("merge")
         pairs = targets.join(mesh_side, F.col(TIME) == F.col("__mt")).filter(
             ~(
                 (F.col("__lvl") == geo.power)
@@ -853,35 +856,9 @@ def grid_lag(
         pairs = pairs.withColumn("__k", (mx * mx + my * my).cast("long")).join(
             wtab, "__k"
         )
-        aggs = []
-        for wname in weights:
-            name = c if wname is None else f"{c}_{wname}"
-            # fixed-point LONG sum: hash-aggregate double sums are
-            # partition-order dependent (engine- AND run-divergent in low
-            # bits — the r5 sf0.1 strictness carve-out was exactly one
-            # such row straddling the 6dp round). floor(term·SCALE) is an
-            # exact IEEE computation (multiply + floor, no rounding-mode
-            # ambiguity), identical on any engine, and integer addition
-            # commutes — so the sum is bit-deterministic at codegen'd
-            # long-sum speed (a DECIMAL(38,18) sum was 3× slower: Spark's
-            # double→decimal cast string-formats per row). Quantization
-            # ≤ 1e-10 per pair term, orders below the 6dp output round;
-            # Σ|term| beyond ~9·10⁸ would overflow the scaled long and
-            # raise under ANSI (lower GRID_SUM_SCALE for such data).
-            term = F.col("__val") * F.col(wcol_of[wname])
-            aggs.append(
-                (
-                    F.sum(F.floor(term * F.lit(GRID_SUM_SCALE)).cast("long"))
-                    / F.lit(GRID_SUM_SCALE)
-                ).alias(name)
-            )
-            out_names.append(name)
-        res = pairs.groupBy(TIME, UNIT).agg(*aggs)
-        out = out.join(res, KEYS, "left")
-    out = out.na.fill(0.0, subset=out_names)
-    if keep_grids:
-        grids = mesh_frames[0]
-        for m in mesh_frames[1:]:
-            grids = grids.unionByName(m)
-        return out, grids
-    return out
+        results.append(pairs.groupBy(TIME, UNIT).agg(*[
+            _fixed_sum(F.col("__val") * F.col(f"__w_{i}"), op).alias(name)
+            for i, name in enumerate(names[c])
+        ]))
+    out = _complete(df, results, out_names)
+    return (out, reduce(DataFrame.unionByName, mesh_frames)) if keep_grids else out

@@ -18,7 +18,7 @@ from __future__ import annotations
 import itertools
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F, types as T
 
 TIME = "time_id"
 UNIT = "unit_id"
@@ -100,7 +100,7 @@ def observed_metrics(obs) -> dict | None:
     return obs.get
 
 
-def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
+def materialize_counted(df: DataFrame, *metrics: Column) -> tuple:
     """``materialize`` plus the row count, read off the SAME checkpoint job.
 
     Size-gated operators (connected_components' driver cap, pagerank's,
@@ -113,6 +113,11 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     by the time ``Observation.get`` is read, so the read returns at once,
     also for an empty frame (``__n = 0``). Returns ``(pinned_df, n)``.
 
+    ``metrics`` are further aggregate Columns (each with a distinct alias)
+    observed in the same job; their values follow ``n`` in order:
+    ``(pinned_df, n, *values)`` (the tree lags' domain check reads its
+    per-feature max |v| this way).
+
     A size gate needs a batch frame: streaming input raises ``ValueError``
     (Spark rejects observations on streaming Datasets)."""
     if df.isStreaming:
@@ -121,8 +126,9 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
             "got a streaming one"
         )
     obs = Observation()
-    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("__n")))
-    return out, int(obs.get["__n"])
+    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("__n"), *metrics))
+    n, *values = obs.get.values()
+    return out, int(n), *values
 
 
 # Python types each side-table column type accepts — the exact-type rule
