@@ -2,13 +2,13 @@ import os
 import sys
 import tempfile
 
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from views_transformation_library_spark.panel import local_table
 from views_transformation_library_spark.session import CODEGEN_CACHE_ENTRIES
 
 
@@ -30,12 +30,19 @@ def spark():
 
 
 def make_panel(spark, rows, cols=("time_id", "unit_id", "value")):
-    """rows: list of tuples matching cols; None -> NULL."""
-    pdf = pd.DataFrame(rows, columns=list(cols))
-    schema = ", ".join(
-        f"{c} long" if c in ("time_id", "unit_id") else f"{c} double" for c in cols
-    )
-    return spark.createDataFrame(pdf, schema=schema)
+    """rows: list of tuples matching cols; None -> NULL, NaN stays NaN.
+
+    Built from Python values as an Arrow LocalRelation (`panel.local_table`),
+    not through pandas: the Arrow conversion of a pandas frame turns NaN
+    into NULL, so a NaN test would test NULL."""
+    keys = ("time_id", "unit_id")
+    schema = ", ".join(f"{c} long" if c in keys else f"{c} double" for c in cols)
+    kinds = [int if c in keys else float for c in cols]
+    data = [
+        tuple(None if v is None else kind(v) for kind, v in zip(kinds, row))
+        for row in rows
+    ]
+    return local_table(spark, data, schema)
 
 
 def collect_panel(df, value_cols=None):

@@ -1445,14 +1445,15 @@ def test_derived_n_centroids_resplits_with_corpus(spark):
     bucket size — and per-bucket pair work — stays constant at scale."""
     rows = [(i, [float(i), 1.0]) for i in range(512)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    assert similarity._derived_n_centroids(df.limit(64), 64) == 1
-    assert similarity._derived_n_centroids(df.limit(128), 64) == 2
-    assert similarity._derived_n_centroids(df, 64) == 8
+
+    def nc(d):
+        return similarity.auto_graph_params(d.count(), 64)["n_centroids"]
+
+    assert nc(df.limit(64)) == 1
+    assert nc(df.limit(128)) == 2
+    assert nc(df) == 8
     # growing the corpus 4x at fixed bucket_target -> 4x the buckets
-    assert (
-        similarity._derived_n_centroids(df, 64)
-        == 4 * similarity._derived_n_centroids(df.limit(128), 64)
-    )
+    assert nc(df) == 4 * nc(df.limit(128))
 
 
 def test_c4_filter_line_and_doc_rules(spark):
@@ -2181,6 +2182,92 @@ def test_two_level_knn_graph_end_to_end(tl_corpus, monkeypatch):
     approx_set = {(r["query_id"], r["neighbor_id"]) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
     assert recall >= 0.6, recall
+
+
+# ---------------------------------------------------------------------------
+# empty / NULL inputs and corpus probes of the vector family
+
+_VECTOR_OPS = {
+    "embedding_neardup_pairs": lambda df: similarity.embedding_neardup_pairs(
+        df, threshold=0.3, n_blocks=4
+    ),
+    "ivf_topk": lambda df: similarity.ivf_topk(df, df, k=3, n_centroids=None, nprobe=None),
+    "knn_graph": lambda df: similarity.knn_graph(df, k=3, n_centroids=None, nprobe=None),
+    "ann_join": lambda df: similarity.ann_join(df, df, k=3, n_centroids=None, nprobe=None),
+    "semantic_dedup": lambda df: similarity.semantic_dedup(
+        df, threshold=0.3, n_clusters=None
+    ),
+    "lsh_topk": lambda df: similarity.lsh_topk(df, df, k=3, n_planes=None),
+    "pq_topk": lambda df: similarity.pq_topk(df, df, k=3, m=4, k_codes=4, rerank="auto"),
+}
+_DEDUP_OPS = {
+    "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
+    "fuzzy_dedup_keep": dedup.fuzzy_dedup_keep,
+}
+
+
+def _hostile_frames(spark, docs, op, case):
+    """(full input, hostile input, twin): an empty or all-NULL input has no
+    twin; a NULL-first corpus has its NULL-last twin."""
+    if op in _DEDUP_OPS:
+        empty = {
+            "limit0": docs.limit(0),
+            "filtered": docs.filter("doc_id < 0"),
+            "created_empty": spark.createDataFrame([], docs.schema),
+        }[case]
+        return docs, empty, None
+    schema = "vec_id long, embedding array<double>"
+    rng = np.random.RandomState(5)
+    valid = [(i, [float(x) for x in rng.randn(8)]) for i in range(59)]
+    full = spark.createDataFrame(valid, schema)
+    if case == "limit0":
+        return full, full.limit(0), None
+    if case == "all_null":
+        return full, spark.createDataFrame([(i, None) for i in range(60)], schema), None
+    null = [(59, None)]
+    return (
+        full,
+        spark.createDataFrame(null + valid, schema),
+        spark.createDataFrame(valid + null, schema),
+    )
+
+
+@pytest.mark.parametrize(
+    "op,case",
+    [(op, c) for op in sorted(_VECTOR_OPS) for c in ("limit0", "all_null", "null_first")]
+    + [(op, c) for op in sorted(_DEDUP_OPS) for c in ("limit0", "filtered", "created_empty")],
+)
+def test_empty_and_null_inputs(spark, docs, op, case):
+    """Empty and all-NULL inputs give the empty result with the output
+    schema; a NULL row gives the same result wherever it sits (the first
+    row is not a sample of the corpus)."""
+    run = {**_VECTOR_OPS, **_DEDUP_OPS}[op]
+    full, frame, twin = _hostile_frames(spark, docs, op, case)
+    if twin is None:
+        out = run(frame)
+        assert out.collect() == []
+        assert out.dtypes == run(full).dtypes
+    else:
+        got = sorted(run(frame).collect())
+        assert got and got == sorted(run(twin).collect())
+
+
+@pytest.mark.parametrize("op", ["ivf_topk", "knn_graph", "semantic_dedup", "ann_join"])
+def test_vector_family_counts_the_corpus_once(vectors, monkeypatch, op):
+    """An auto-parameter build reads the corpus size from ONE count(): no
+    emptiness first() beside it and no second count for the trainer's
+    sample_mod. ann_join adds one first() on its queries."""
+    calls = []
+    for name in ("count", "first"):
+        real = getattr(type(vectors), name)
+
+        def spy(self, *a, _name=name, _real=real, **kw):
+            calls.append(_name)
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(type(vectors), name, spy)
+    _VECTOR_OPS[op](vectors)
+    assert sorted(calls) == (["count", "first"] if op == "ann_join" else ["count"])
 
 
 def test_ngram_jaccard_guard_counters(spark):

@@ -189,3 +189,15 @@ def test_impute_mice_draws_generator_matches_list(spark):
         )
     ]
     assert from_gen == from_list
+
+
+def test_make_panel_keeps_nan_apart_from_null(spark):
+    """The test helper must not turn NaN into NULL (pandas' Arrow
+    conversion does): NaN-vs-NULL cases in this suite mean what they say."""
+    from pyspark.sql import functions as F
+
+    df = make_panel(spark, [(1, 1, float("nan")), (2, 1, None), (3, 1, 2)])
+    got = {r["time_id"]: r["value"] for r in df.collect()}
+    assert math.isnan(got[1]) and got[2] is None and got[3] == 2.0
+    assert df.filter(F.col("value").isNull()).count() == 1
+    assert df.filter(F.isnan("value")).count() == 1

@@ -96,13 +96,13 @@ def lsh_guard_stats(df_or_obs, block: bool = False) -> dict | None:
         # precomputed counters (ngram_jaccard r10): already exact ints,
         # available regardless of `block` or whether an action has run
         return dict(obs)
-    raw = obs.get if block else observed_metrics(obs)
+    raw = observed_metrics(obs, block)
     if raw is None:
         return None
     return {
-        "skipped_rows": int(raw["skipped_rows"] or 0),
-        "skipped_pairs": int(raw["skipped_pair_terms"] or 0) // 2,
-        "skipped_buckets": int(round(float(raw["skipped_bucket_frac"] or 0.0))),
+        "skipped_rows": int(raw.get("skipped_rows") or 0),
+        "skipped_pairs": int(raw.get("skipped_pair_terms") or 0) // 2,
+        "skipped_buckets": int(round(float(raw.get("skipped_bucket_frac") or 0.0))),
     }
 
 
@@ -278,7 +278,7 @@ def ngram_jaccard_pairs(
     # must NEVER be a build side. An explicit hint on the sizes side pins
     # the build side either way; Spark's own estimate picked
     # BuildLeft(inter) at sf5 and collected 6 GB to the driver.
-    if int(docs_obs.get["__docs"]) <= SIZES_BROADCAST_CAP:
+    if int(observed_metrics(docs_obs, block=True).get("__docs", 0)) <= SIZES_BROADCAST_CAP:
         sz_a, sz_b = F.broadcast(sz_a), F.broadcast(sz_b)
     else:
         sz_a, sz_b = sz_a.hint("shuffle_hash"), sz_b.hint("shuffle_hash")

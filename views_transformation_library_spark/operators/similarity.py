@@ -117,13 +117,13 @@ def auto_ann_params(n: int) -> dict:
 PQ_QUERY_DRIVER_CAP = 8_192
 
 
-def _empty_topk(vectors: DataFrame, id_col: str) -> DataFrame:
+def _empty_topk(vectors: DataFrame, id_col: str, score: str = "cosine") -> DataFrame:
     """Empty result with the top-k output schema (empty/all-null input)."""
     id_type = dict(vectors.dtypes).get(id_col, "bigint")
     return local_table(
         vectors.sparkSession,
         [],
-        f"query_id {id_type}, neighbor_id {id_type}, cosine double, rank int",
+        f"query_id {id_type}, neighbor_id {id_type}, {score} double, rank int",
     )
 
 
@@ -211,39 +211,28 @@ def embedding_neardup_pairs(
     t = float(threshold)
     d_t = math.sqrt(max(0.0, 2.0 - 2.0 * t)) if t > -1.0 else 2.0
     base = vectors.filter(_norm(F.col(vec_col)) > 0)  # zero-norm: NULL cosine, never output
-    frow = base.select(vec_col).first()
-    if frow is None:
-        id_type = dict(vectors.dtypes).get(id_col, "bigint")
-        return local_table(
-            vectors.sparkSession, [], f"a {id_type}, b {id_type}, cosine double"
-        )
     unit = F.transform(
         F.col(vec_col), lambda x: x.cast("double") / _norm(F.col(vec_col))
     )
     unit_df = base.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"), unit.alias("__u"))
-    centroids = train_ivf_centroids(
-        unit_df, n_centroids=n_blocks, id_col="__id", vec_col="__u", seed=seed
+    built = _ivf_index(
+        unit_df, n_blocks, 1, id_col="__id", vec_col="__u", seed=seed, two_level=False
     )
+    if built is None:
+        id_type = dict(vectors.dtypes).get(id_col, "bigint")
+        return local_table(
+            vectors.sparkSession, [], f"a {id_type}, b {id_type}, cosine double"
+        )
+    centroids = built[0]
     # one shared assignment table feeds BOTH self-join branches and the
     # radius aggregate — materialize so the scan+assign runs once
-    if len(centroids) >= ARROW_ASSIGN_MIN_NC:
-        assigned = materialize(
-            assign_probes_arrow(unit_df, "__u", centroids, 1, with_d2=True)
-            .select(
-                "__id", "__v",
-                F.col("__probes")[0].alias("__blk"),
-                F.sqrt(F.col("__d2")).alias("__r"),
-            )
+    assigned = materialize(
+        _assign(unit_df, "__u", centroids, with_d2=True).select(
+            "__id", "__v",
+            F.col("__probes")[0].alias("__blk"),
+            F.sqrt(F.col("__d2")).alias("__r"),
         )
-    else:
-        nearest = _bucket_structs("__u", centroids)[0]
-        assigned = materialize(
-            unit_df.select(
-                "__id", "__v",
-                nearest["c"].alias("__blk"),
-                F.sqrt(nearest["d2"]).alias("__r"),
-            )
-        )
+    )
     radii = {
         r["__blk"]: r["r"]
         for r in assigned.groupBy("__blk").agg(F.max("__r").alias("r")).collect()
@@ -364,29 +353,60 @@ def _stack_vectors(seq) -> "np.ndarray":
     return np.vstack(arrs) if arrs else np.empty((0, 0), dtype=np.float64)
 
 
-def train_pca(
+# Row bound of every trainer's driver sample (PCA basis, IVF centroids,
+# PQ codebooks): ~1e5 vectors at any table size.
+SAMPLE_CAP = 100_000
+
+
+def _sample_mod(n: int, sample_cap: int = SAMPLE_CAP) -> int:
+    """The id-hash modulus that keeps a driver sample of an ``n``-row
+    corpus at <= ~``sample_cap`` rows (ceil division)."""
+    return max(1, -(-int(n) // int(sample_cap)))
+
+
+def _driver_sample(
     vectors: DataFrame,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str,
+    vec_col: str,
     sample_mod: int | None = None,
-    sample_cap: int = 100_000,
-) -> tuple[list[float], list[list[float]]]:
-    """PCA basis from a BOUNDED deterministic driver sample (the
-    train_ivf_centroids pattern): xxhash64(id) % mod == 0 keeps ≤
-    ~sample_cap vectors regardless of table size, sorted by id so the
-    numpy pass is bit-reproducible — at 100 TB you fit the basis on ~1e5
-    hash-sampled vectors and PROJECT distributed."""
+    sample_cap: int = SAMPLE_CAP,
+) -> "np.ndarray":
+    """THE bounded deterministic driver sample the trainers fit on: the
+    rows with ``xxhash64(id) % sample_mod == 0`` (reproducible and
+    independent of id density), in id order so the numpy pass is
+    bit-reproducible. ``sample_mod=None`` derives it from one count of
+    ``vectors``; callers that already counted pass ``_sample_mod(n)``.
+
+    Returns the valid vectors stacked float64: null, empty and
+    wrong-dimension rows (the dimension of the first valid one) carry no
+    geometry and are dropped. An empty or all-NULL sample is ``(0, 0)``."""
     if sample_mod is None:
-        n = vectors.count()
-        sample_mod = max(1, -(-n // sample_cap))
+        sample_mod = _sample_mod(vectors.count(), sample_cap)
     pdf = (
         vectors.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_mod)) == 0)
         .select(id_col, vec_col)
         .toPandas()
         .sort_values(id_col)
     )
-    X = _stack_vectors(pdf[vec_col])
+    vals = [v for v in pdf[vec_col] if v is not None and len(v) > 0]
+    dim = len(vals[0]) if vals else 0
+    return _stack_vectors(v for v in vals if len(v) == dim)
+
+
+def train_pca(
+    vectors: DataFrame,
+    k: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    sample_mod: int | None = None,
+    sample_cap: int = SAMPLE_CAP,
+) -> tuple[list[float], list[list[float]]]:
+    """PCA basis from a BOUNDED deterministic driver sample (the
+    train_ivf_centroids pattern): xxhash64(id) % mod == 0 keeps ≤
+    ~sample_cap vectors regardless of table size, sorted by id so the
+    numpy pass is bit-reproducible — at 100 TB you fit the basis on ~1e5
+    hash-sampled vectors and PROJECT distributed."""
+    X = _driver_sample(vectors, id_col, vec_col, sample_mod, sample_cap)
     return pca_fit(X, k)
 
 
@@ -634,34 +654,16 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    sample_cap: int = 100_000,
+    sample_cap: int = SAMPLE_CAP,
 ) -> list[list[float]]:
-    """Deterministic Lloyd's k-means on a *bounded* driver-side sample.
-
-    By default ``sample_mod`` is derived from a cheap count so the driver
-    pulls at most ~``sample_cap`` vectors regardless of table size — at
-    100 TB you train on ~10^5 hash-sampled vectors, never the full table.
-    The sample is id-hash based (``xxhash64(id) % mod == 0``) so it is
-    reproducible and independent of id density. Pure numpy (no sklearn
-    dependency); empty clusters keep their previous centroid."""
-    if sample_mod is None:
-        n = vectors.count()
-        sample_mod = max(1, -(-n // sample_cap))  # ceil division
-    pdf = (
-        vectors.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_mod)) == 0)
-        .select(id_col, vec_col)
-        .toPandas()
-        .sort_values(id_col)
-    )
-    # train on the valid vectors only: null / wrong-dimension rows carry
-    # no geometry (they assign to the null-d2 bucket downstream and every
-    # scorer drops them) — and a ragged np.array would crash the trainer
-    vals = [v for v in pdf[vec_col] if v is not None and len(v) > 0]
-    dim = len(vals[0]) if vals else 0
-    # vstack of the Arrow-native arrays, not np.array([list(v) ...]):
-    # boxing every element through a python list cost ~15 s at a 100k×64
-    # sample (6.4M PyFloat objects) — identical float64 values either way
-    X = _stack_vectors(v for v in vals if len(v) == dim)
+    """Deterministic Lloyd's k-means on the bounded driver sample
+    (`_driver_sample`: at 100 TB you train on ~10^5 hash-sampled
+    vectors, never the full table). Pure numpy (no sklearn dependency);
+    empty clusters keep their previous centroid. Returns ``[]`` when the
+    sample holds no valid vector (empty or all-NULL input)."""
+    X = _driver_sample(vectors, id_col, vec_col, sample_mod, sample_cap)
+    if not len(X):
+        return []
     return lloyd_kmeans(X, n_centroids, n_iters=n_iters, seed=seed)
 
 
@@ -727,9 +729,8 @@ def train_ivf_centroids_distributed(
     on ≤ ~1e5 vectors; this variant trains on EVERY vector without any
     driver-side materialization of the table:
 
-    - *assign*: nearest-centroid id is a pure column expression over the
-      centroid literals (`_bucket_structs`) — runs inside the scan, no join,
-      no shuffle of the vector payload.
+    - *assign*: nearest-centroid id by `_assign` (flat, exact) — runs
+      inside the scan, no join, no shuffle of the vector payload.
     - *update*: `posexplode` the vector and hash-aggregate
       (bucket, dim) → (sum, count). Map-side partial aggregation collapses
       each task to ≤ n_centroids × dim rows before the shuffle, so per
@@ -747,8 +748,9 @@ def train_ivf_centroids_distributed(
     a JVM (`replay_distributed_training` — the strict-oracle hook for
     ivf_topk_dist). Empty clusters keep their previous centroid (same
     policy as the driver-sample trainer). Initial centroids default to
-    the n_centroids vectors with the smallest (xxhash64(id, seed), id) —
-    a deterministic, order-independent sample.
+    the n_centroids non-NULL vectors with the smallest
+    (xxhash64(id, seed), id) — a deterministic, order-independent sample;
+    ``[]`` when there is none.
     """
     base = vectors.select(F.col(vec_col).alias("__v"), F.col(id_col).alias("__id"))
     if init_centroids is None:
@@ -756,7 +758,8 @@ def train_ivf_centroids_distributed(
             # lit(seed) cast LONG so the hash is two hashLong folds —
             # replayable as xxhash64_long(seed, xxhash64_long(id, 42))
             # (an int32 literal would take Spark's 4-byte hash path)
-            base.select(
+            base.filter(F.col("__v").isNotNull())
+            .select(
                 "__v",
                 F.xxhash64(F.col("__id"), F.lit(int(seed)).cast("long")).alias("__h"),
             )
@@ -770,14 +773,9 @@ def train_ivf_centroids_distributed(
     else:
         centroids = [list(map(float, c)) for c in init_centroids]
     for _ in range(n_iters):
-        if len(centroids) >= ARROW_ASSIGN_MIN_NC:
-            bucketed = assign_probes_arrow(
-                base.select("__v"), "__v", centroids, 1
-            ).select(F.col("__probes")[0].alias("__b"), "__v")
-        else:
-            bucketed = base.select(
-                _bucket_structs("__v", centroids)[0]["c"].alias("__b"), "__v"
-            )
+        bucketed = _assign(base.select("__v"), "__v", centroids).select(
+            F.col("__probes")[0].alias("__b"), "__v"
+        )
         # assignment and posexplode in separate selects: a generator next to
         # a struct-subscript expression makes the analyzer resolve the
         # subscript against the generator's (col1, col2) output struct
@@ -1204,6 +1202,119 @@ def assign_probes_two_level(
     return df.mapInPandas(run, schema=schema)
 
 
+def _assign(
+    df: DataFrame,
+    vec_col: str,
+    centroids: list[list[float]],
+    nprobe: int = 1,
+    two_level: dict | None = None,
+    with_d2: bool = False,
+    explode: bool = False,
+) -> DataFrame:
+    """THE nearest-centroid assignment of the IVF family: ``df`` +
+    ``__probes array<int>`` (the ``nprobe`` nearest centroid ids by
+    (d2, centroid id)) and, ``with_d2``, ``__d2`` (the nearest d2).
+    ``explode=True`` (the probing side of a bucket join) returns one row
+    per probe with its id in ``__bucket`` instead of ``__probes``.
+
+    The path is chosen here and only here, at identical output bytes:
+    the plan-literal `_bucket_structs` expression below
+    ARROW_ASSIGN_MIN_NC centroids, `assign_probes_arrow` at or above it,
+    and `assign_probes_two_level` only when handed a ``two_level`` index
+    (`_ivf_index` builds one when `two_level_engages`; the exact
+    nearest-centroid callers never pass one). On the expression path a
+    single probe is ``array(nearest.c)``, which Catalyst folds back to
+    ``nearest.c`` under the caller's ``__probes[0]``, and the explode
+    reads the expression itself: exploding a projected ``__probes``
+    column makes Catalyst infer ``size(__probes) > 0``, push it below the
+    projection and evaluate the whole assignment twice."""
+    if two_level is not None:
+        out = assign_probes_two_level(df, vec_col, centroids, nprobe, two_level, with_d2)
+    elif len(centroids) >= ARROW_ASSIGN_MIN_NC:
+        out = assign_probes_arrow(df, vec_col, centroids, nprobe, with_d2)
+    else:
+        ranked = _bucket_structs(vec_col, centroids)
+        probes = (
+            F.array(ranked[0]["c"])
+            if nprobe == 1
+            else F.transform(F.slice(ranked, 1, nprobe), lambda s: s["c"])
+        )
+        if explode:
+            return df.select("*", F.explode(probes).alias("__bucket"))
+        d2 = [ranked[0]["d2"].alias("__d2")] if with_d2 else []
+        return df.select("*", probes.alias("__probes"), *d2)
+    if explode:
+        return out.select(*df.columns, F.explode("__probes").alias("__bucket"))
+    return out
+
+
+def _ivf_index(
+    vectors: DataFrame,
+    n_centroids: int | None,
+    nprobe: int | None,
+    *,
+    id_col: str,
+    vec_col: str,
+    seed: int,
+    centroids: list[list[float]] | None = None,
+    sample_mod: int | None = None,
+    train_distributed: bool = False,
+    n_iters: int = 5,
+    auto_nc=None,
+    auto_nprobe=None,
+    two_level: bool = True,
+) -> tuple | None:
+    """THE index build of the IVF family: take pretrained ``centroids``,
+    or train them (fully distributed, or on the bounded driver sample),
+    then resolve the probe count. Returns ``(centroids, nprobe, index)``
+    — ``index`` the two-level index when ``two_level`` and
+    `two_level_engages`, else None — or None when the corpus holds no
+    valid vector (empty or all-NULL input: callers return their empty
+    result).
+
+    The corpus is counted at most once: ``n_centroids=None`` takes
+    ``auto_nc(n)``, ``nprobe=None`` takes ``auto_nprobe(n)`` (or, without
+    one, `_graph_nprobe` of the realized index), and the driver-sample
+    trainer gets ``_sample_mod(n)``; ``n == 0`` is the emptiness
+    test. Only when no size is needed (pretrained centroids, or explicit
+    parameters with a given ``sample_mod`` or distributed training) does
+    one cheap ``first()`` test for emptiness instead."""
+    train = centroids is None
+    need_n = (nprobe is None and auto_nprobe is not None) or (
+        train and (n_centroids is None or (sample_mod is None and not train_distributed))
+    )
+    n = None
+    if need_n:
+        n = vectors.count()
+        if n == 0:
+            return None
+    elif vectors.select(vec_col).first() is None:
+        return None
+    if train:
+        if n_centroids is None:
+            n_centroids = auto_nc(n)
+        if train_distributed:
+            centroids = train_ivf_centroids_distributed(
+                vectors, n_centroids, n_iters, id_col=id_col, vec_col=vec_col, seed=seed
+            )
+        else:
+            centroids = train_ivf_centroids(
+                vectors, n_centroids, n_iters, id_col=id_col, vec_col=vec_col, seed=seed,
+                sample_mod=sample_mod if sample_mod is not None else _sample_mod(n),
+            )
+        if not centroids:
+            return None
+    if nprobe is None:
+        nprobe = auto_nprobe(n) if auto_nprobe else _graph_nprobe(len(centroids))
+    nprobe = min(int(nprobe), len(centroids))
+    index = (
+        two_level_index(centroids, nprobe, seed=seed)
+        if two_level and two_level_engages(len(centroids), nprobe)
+        else None
+    )
+    return centroids, nprobe, index
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -1222,13 +1333,12 @@ def ivf_topk(
     buckets. Candidate count drops by ~n_centroids/nprobe at recall < 1.
 
     Centroids are tiny literals baked into the plan (broadcast by value);
-    bucket assignment is a pure column expression that runs inside the scan
-    — the only join is queries x same-bucket vectors.
+    bucket assignment (`_assign`) runs inside the scan — the only join is
+    queries x same-bucket vectors.
 
-    Training is bounded by default: `train_ivf_centroids` derives
-    `sample_mod` from a cheap count so the driver sample stays ≤ ~1e5
-    vectors regardless of table size; `train_distributed=True` trains on
-    every vector with zero driver-side table materialization
+    Training is bounded by default (`_ivf_index`): the driver sample stays
+    ≤ ~1e5 vectors regardless of table size; `train_distributed=True`
+    trains on every vector with zero driver-side table materialization
     (`train_ivf_centroids_distributed`); pass pretrained `centroids` to
     skip training entirely.
 
@@ -1236,91 +1346,29 @@ def ivf_topk(
     the corpus size at plan time (`auto_ann_params`: √n centroids, a
     quarter of them probed — the recall-stable default as corpora
     scale)."""
-    frow = vectors.select(vec_col).first()
-    if centroids is None and frow is None:
+    built = _ivf_index(
+        vectors, n_centroids, nprobe, id_col=id_col, vec_col=vec_col, seed=seed,
+        centroids=centroids, sample_mod=sample_mod,
+        train_distributed=train_distributed,
+        auto_nc=lambda n: auto_ann_params(n)["n_centroids"],
+        auto_nprobe=lambda n: auto_ann_params(n)["nprobe"],
+    )
+    if built is None:
         return _empty_topk(vectors, id_col)
-    if n_centroids is None or nprobe is None:
-        auto = auto_ann_params(vectors.count())
-        n_centroids = len(centroids) if centroids is not None else (
-            n_centroids or auto["n_centroids"]
-        )
-        nprobe = nprobe or auto["nprobe"]
-    if centroids is None and train_distributed:
-        centroids = train_ivf_centroids_distributed(
-            vectors, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed
-        )
-    elif centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed,
-            sample_mod=sample_mod,
-        )
-    if two_level_engages(len(centroids), nprobe):
-        tl = two_level_index(centroids, nprobe, seed=seed)
-        v = assign_probes_two_level(
-            vectors.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vv")
-            ),
-            "__vv", centroids, 1, tl,
-        ).select(
-            "neighbor_id", "__vv", _norm(F.col("__vv")).alias("__vn"),
-            F.col("__probes")[0].alias("__bucket"),
-        )
-        q = assign_probes_two_level(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-            ),
-            "__qv", centroids, nprobe, tl,
-        ).select(
-            "query_id", "__qv", _norm(F.col("__qv")).alias("__qn"),
-            F.explode("__probes").alias("__bucket"),
-        )
-    elif len(centroids) >= ARROW_ASSIGN_MIN_NC:
-        v = assign_probes_arrow(
-            vectors.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vv")
-            ),
-            "__vv", centroids, 1,
-        ).select(
-            "neighbor_id", "__vv", _norm(F.col("__vv")).alias("__vn"),
-            F.col("__probes")[0].alias("__bucket"),
-        )
-        q = assign_probes_arrow(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-            ),
-            "__qv", centroids, nprobe,
-        ).select(
-            "query_id", "__qv", _norm(F.col("__qv")).alias("__qn"),
-            F.explode("__probes").alias("__bucket"),
-        )
-    else:
-        v = vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__vv"),
-            _norm(F.col(vec_col)).alias("__vn"),
-            _bucket_structs(vec_col, centroids)[0]["c"].alias("__bucket"),
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qn"),
-            F.explode(
-                F.transform(
-                    F.slice(_bucket_structs(vec_col, centroids), 1, nprobe),
-                    lambda s: s["c"],
-                )
-            ).alias("__bucket"),
-        )
+    centroids, nprobe, index = built
+    v = _assign(
+        vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vv")),
+        "__vv", centroids, 1, index,
+    ).select(
+        "neighbor_id", "__vv", _norm(F.col("__vv")).alias("__vn"),
+        F.col("__probes")[0].alias("__bucket"),
+    )
+    q = _assign(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")),
+        "__qv", centroids, nprobe, index, explode=True,
+    ).select("query_id", "__qv", _norm(F.col("__qv")).alias("__qn"), "__bucket")
     pairs = v.join(F.broadcast(q), "__bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     return _score_and_rank(pairs, k)
-
-
-def _derived_n_centroids(df: DataFrame, bucket_target: int) -> int:
-    """n_centroids ∝ N (the SemDeDup sizing rule): one cheap count, then
-    ceil(N / bucket_target) buckets so the mean bucket size — and with it
-    per-bucket pair work — stays constant as the corpus grows."""
-    n = df.count()
-    return max(1, -(-n // int(bucket_target)))
 
 
 # Default mean bucket size for the cogrouped graph family (knn_graph /
@@ -1423,61 +1471,23 @@ def knn_graph(
 
     Output: (query_id, neighbor_id, cosine, rank), rank <= k.
     """
-    frow = vectors.select(vec_col).first()
-    if frow is None:
-        return _empty_topk(vectors, id_col)
-    if centroids is None and n_centroids is None:
-        # n_centroids=None: size buckets to the corpus (∝ N) so per-bucket
-        # pair work stays bounded as the table grows
-        n_centroids = _derived_n_centroids(vectors, bucket_target)
-    if centroids is None and train_distributed:
-        centroids = train_ivf_centroids_distributed(
-            vectors, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed
-        )
-    elif centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed,
-            sample_mod=sample_mod,
-        )
-    # nprobe=None: the auto_graph_params probe rule on the realized
-    # index size (sublinear probed fraction — see the policy docstring)
-    nprobe = (
-        _graph_nprobe(len(centroids))
-        if nprobe is None
-        else min(int(nprobe), len(centroids))
+    # n_centroids=None sizes buckets to the corpus (∝ N, `auto_graph_params`)
+    # so per-bucket pair work stays bounded as the table grows; nprobe=None
+    # is its probe rule on the realized index size
+    built = _ivf_index(
+        vectors, n_centroids, nprobe, id_col=id_col, vec_col=vec_col, seed=seed,
+        centroids=centroids, sample_mod=sample_mod,
+        train_distributed=train_distributed,
+        auto_nc=lambda n: auto_graph_params(n, bucket_target)["n_centroids"],
     )
+    if built is None:
+        return _empty_topk(vectors, id_col)
+    centroids, nprobe, index = built
     # one assignment pass feeds BOTH cogroup branches: probes[0] is the
     # member bucket, the full slice is the probe list — materialized so the
-    # scan + centroid distances run once, not per branch. Large indexes
-    # (the auto_graph_params regime) assign in Arrow/numpy: the expression
-    # path's interpreted evals scale with rows × nc (r8's 21 s at sf1).
-    base = vectors.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    )
-    if two_level_engages(len(centroids), nprobe):
-        # two-level coarse quantizer (r10): super-rank then score only the
-        # nsp nearest supers' children — assignment flops ∝ √nc per row
-        # instead of nc, the escape from the last ∝ n² term. The oracle
-        # derives the IDENTICAL index/probe sets via `two_level_index`.
-        tl = two_level_index(centroids, nprobe, seed=seed)
-        assigned = materialize(
-            assign_probes_two_level(base, "__v", centroids, nprobe, tl)
-        )
-    elif len(centroids) >= ARROW_ASSIGN_MIN_NC:
-        assigned = materialize(
-            assign_probes_arrow(base, "__v", centroids, nprobe)
-        )
-    else:
-        assigned = materialize(
-            base.select(
-                "__id",
-                "__v",
-                F.transform(
-                    F.slice(_bucket_structs("__v", centroids), 1, nprobe),
-                    lambda s: s["c"],
-                ).alias("__probes"),
-            )
-        )
+    # scan + centroid distances run once, not per branch
+    base = vectors.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+    assigned = materialize(_assign(base, "__v", centroids, nprobe, index))
     members = assigned.select(
         "__id", "__v", F.col("__probes")[0].alias("__bucket")
     )
@@ -1493,8 +1503,7 @@ def knn_graph(
     )
     id_t = dict(vectors.dtypes).get(id_col, "bigint")
     return _cogrouped_bucket_topk(
-        members, probes, k, id_t, exclude_self=True,
-        dim=len(centroids[0]) if centroids else None,
+        members, probes, k, id_t, exclude_self=True, dim=len(centroids[0])
     )
 
 
@@ -1504,7 +1513,7 @@ def _cogrouped_bucket_topk(
     k: int,
     id_t: str,
     exclude_self: bool,
-    dim: int | None = None,
+    dim: int,
 ) -> DataFrame:
     """Shared bucket-cogrouped scoring/ranking tail for the large-large
     ANN shapes (`knn_graph`, `ann_join`). members: (__id, __v, __bucket);
@@ -1572,15 +1581,10 @@ def _cogrouped_bucket_topk(
             return empty
 
         def prep(pdf, id_c, v_c):
-            # null and (when the caller supplies the index dimension)
-            # wrong-dimension vectors carry no defined cosine — drop them
-            # like zero-norm rows instead of crashing np.vstack (r9)
+            # null and wrong-dimension vectors carry no defined cosine —
+            # drop them like zero-norm rows instead of crashing np.vstack
             ok = np.array(
-                [
-                    v is not None and (exp_dim is None or len(v) == exp_dim)
-                    for v in pdf[v_c]
-                ],
-                dtype=bool,
+                [v is not None and len(v) == exp_dim for v in pdf[v_c]], dtype=bool
             )
             ids = pdf[id_c].values[ok]
             if not ok.any():
@@ -1715,70 +1719,31 @@ def ann_join(
     Output: (query_id, neighbor_id, cosine, rank), rank <= k —
     approximate by candidate coverage; scores are exact 6dp cosines.
     """
-    if corpus.select(vec_col).first() is None or queries.select(vec_col).first() is None:
+    if queries.select(vec_col).first() is None:
         return _empty_topk(corpus, id_col)
-    if centroids is None and n_centroids is None:
-        n_centroids = _derived_n_centroids(corpus, bucket_target)
-    if centroids is None and train_distributed:
-        centroids = train_ivf_centroids_distributed(
-            corpus, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed
-        )
-    elif centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_centroids, id_col=id_col, vec_col=vec_col, seed=seed,
-            sample_mod=sample_mod,
-        )
-    # nprobe=None: the auto_graph_params probe rule on the realized
-    # index size (sublinear probed fraction — see the policy docstring)
-    nprobe = (
-        _graph_nprobe(len(centroids))
-        if nprobe is None
-        else min(int(nprobe), len(centroids))
+    built = _ivf_index(
+        corpus, n_centroids, nprobe, id_col=id_col, vec_col=vec_col, seed=seed,
+        centroids=centroids, sample_mod=sample_mod,
+        train_distributed=train_distributed,
+        auto_nc=lambda n: auto_graph_params(n, bucket_target)["n_centroids"],
     )
+    if built is None:
+        return _empty_topk(corpus, id_col)
+    centroids, nprobe, index = built
     # single-consumer scans on both sides: no materialize needed — each
-    # assignment pass runs inside its own source scan exactly once. Large
-    # indexes assign in Arrow (same bytes; see assign_probes_arrow); the
-    # largest go two-level (√nc flops per row; same index on both sides,
-    # members take probes[0] of the restricted ranking).
-    if two_level_engages(len(centroids), nprobe):
-        tl = two_level_index(centroids, nprobe, seed=seed)
-        members = assign_probes_two_level(
-            corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
-            "__v", centroids, 1, tl,
-        ).select("__id", "__v", F.col("__probes")[0].alias("__bucket"))
-        probes = assign_probes_two_level(
-            queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv")),
-            "__qv", centroids, nprobe, tl,
-        ).select("__qid", "__qv", F.explode("__probes").alias("__bucket"))
-    elif len(centroids) >= ARROW_ASSIGN_MIN_NC:
-        members = assign_probes_arrow(
-            corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
-            "__v", centroids, 1,
-        ).select("__id", "__v", F.col("__probes")[0].alias("__bucket"))
-        probes = assign_probes_arrow(
-            queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv")),
-            "__qv", centroids, nprobe,
-        ).select("__qid", "__qv", F.explode("__probes").alias("__bucket"))
-    else:
-        members = corpus.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            _bucket_structs(vec_col, centroids)[0]["c"].alias("__bucket"),
-        )
-        probes = queries.select(
-            F.col(id_col).alias("__qid"),
-            F.col(vec_col).alias("__qv"),
-            F.explode(
-                F.transform(
-                    F.slice(_bucket_structs(vec_col, centroids), 1, nprobe),
-                    lambda s: s["c"],
-                )
-            ).alias("__bucket"),
-        )
+    # assignment pass runs inside its own source scan exactly once; the
+    # same index serves both sides, members take probes[0]
+    members = _assign(
+        corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
+        "__v", centroids, 1, index,
+    ).select("__id", "__v", F.col("__probes")[0].alias("__bucket"))
+    probes = _assign(
+        queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv")),
+        "__qv", centroids, nprobe, index, explode=True,
+    )
     id_t = dict(corpus.dtypes).get(id_col, "bigint")
     return _cogrouped_bucket_topk(
-        members, probes, k, id_t, exclude_self=exclude_self,
-        dim=len(centroids[0]) if centroids else None,
+        members, probes, k, id_t, exclude_self=exclude_self, dim=len(centroids[0])
     )
 
 
@@ -1797,16 +1762,6 @@ def _d2_mul_expr(vec_col: str, centroid: list[float]):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def nearest_cluster_expr(vec_col: str, centroids: list[list[float]]):
-    """Nearest-centroid id as a pure column expression (runs inside the
-    scan); ties on distance break to the lower centroid id."""
-    entries = [
-        F.struct(_d2_mul_expr(vec_col, c).alias("d2"), F.lit(i).alias("c"))
-        for i, c in enumerate(centroids)
-    ]
-    return F.array_sort(F.array(*entries))[0]["c"]
 
 
 def semantic_dedup(
@@ -1835,9 +1790,10 @@ def semantic_dedup(
         the most informative representatives.
 
     Output: (vec_id, cluster, keep) for EVERY input vector — keep=false
-    marks semantic duplicates to discard. Cosines are 6dp-rounded before
-    the threshold compare (engine-parity rule); zero-norm vectors have
-    undefined cosine and are always kept.
+    marks semantic duplicates to discard — or no rows when the corpus is
+    empty or all-NULL (nothing to cluster). Cosines are 6dp-rounded
+    before the threshold compare (engine-parity rule); zero-norm vectors
+    have undefined cosine and are always kept.
 
     Scale design: this is the SemDeDup bargain — candidate pairs are
     confined to clusters, so pair work is sum_i |c_i|^2 instead of N^2.
@@ -1847,59 +1803,37 @@ def semantic_dedup(
     LINEAR in N; a fixed n_clusters leaves it quadratic (measured: the r9
     sf3/sf5 sweep, SCALING_r09.md). The cluster-id groupBy shuffles each
     vector once.
-    Assignment is a centroid-literal column expression in the scan (no
-    join); the assignment table is materialized once and feeds both
+    Assignment is the flat exact `_assign` in the scan (no join); the
+    assignment table is materialized once and feeds both
     self-join branches (Catalyst would otherwise re-run scan+assign per
     branch). A pathological hot cluster degrades to |c|^2 *work* but stays
     a hash-partitioned equi-join, never a broadcast explosion.
     """
     if keep not in ("min_id", "farthest"):
         raise ValueError(f"keep must be 'min_id' or 'farthest', got {keep!r}")
-    frow = vectors.select(vec_col).first()
-    if frow is None:
+    built = _ivf_index(
+        vectors, n_clusters, 1, id_col=id_col, vec_col=vec_col, seed=seed,
+        centroids=centroids, n_iters=n_iters, auto_nc=semdedup_n_clusters,
+        two_level=False,
+    )
+    if built is None:
         id_type = dict(vectors.dtypes).get(id_col, "bigint")
         return local_table(
             vectors.sparkSession, [], f"{id_col} {id_type}, cluster int, keep boolean"
         )
-    if n_clusters is None:
-        n_clusters = (
-            len(centroids)
-            if centroids is not None
-            else semdedup_n_clusters(vectors.count())
+    centroids = built[0]
+    assigned = materialize(
+        _assign(
+            vectors.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
+            "__v", centroids, with_d2=True,
+        ).select(
+            "__id", "__v", _norm(F.col("__v")).alias("__n"),
+            F.col("__probes")[0].cast("int").alias("__cl"),
+            # raw d2 to the assigned centroid: the same fold the
+            # assignment argmin compares, so oracle parity is bit-exact
+            F.col("__d2").alias("__dc"),
         )
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, n_clusters, n_iters=n_iters, id_col=id_col,
-            vec_col=vec_col, seed=seed,
-        )
-    if len(centroids) >= ARROW_ASSIGN_MIN_NC:
-        assigned = materialize(
-            assign_probes_arrow(
-                vectors.select(
-                    F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-                ),
-                "__v", centroids, 1, with_d2=True,
-            ).select(
-                "__id", "__v", _norm(F.col("__v")).alias("__n"),
-                F.col("__probes")[0].cast("int").alias("__cl"),
-                # raw d2 to the assigned centroid: the same fold the
-                # assignment argmin compares, so oracle parity is bit-exact
-                F.col("__d2").alias("__dc"),
-            )
-        )
-    else:
-        nearest = _bucket_structs(vec_col, centroids)[0]
-        assigned = materialize(
-            vectors.select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).alias("__v"),
-                _norm(F.col(vec_col)).alias("__n"),
-                nearest["c"].cast("int").alias("__cl"),
-                # raw d2 to the assigned centroid: the same fold the
-                # assignment argmin compares, so oracle parity is bit-exact
-                nearest["d2"].alias("__dc"),
-            )
-        )
+    )
     # candidate pairs via per-cluster numpy scoring (grouped applyInPandas,
     # chunked pair matrices): each vector ships once per cluster, not once
     # per pair, and the dot is the same left-associated float64 fold as
@@ -1969,9 +1903,6 @@ def semantic_dedup(
     )
 
 
-PQ_TRAIN_SAMPLE_CAP = 100_000
-
-
 def train_pq_codebooks(
     vectors: DataFrame,
     m: int = 8,
@@ -1981,7 +1912,7 @@ def train_pq_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    sample_cap: int = PQ_TRAIN_SAMPLE_CAP,
+    sample_cap: int = SAMPLE_CAP,
     normalize: bool = True,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
@@ -1989,23 +1920,15 @@ def train_pq_codebooks(
     ``m`` contiguous subspaces and each gets its own ``k_codes``-centroid
     k-means codebook, trained per subspace on the same bounded id-hash
     driver sample as `train_ivf_centroids` (≤ ~sample_cap rows at any
-    table size). Returns m codebooks of k_codes × (dim/m) floats.
+    table size). Returns m codebooks of k_codes × (dim/m) floats, or
+    ``[]`` when the sample holds no valid vector.
 
     ``normalize=True`` trains on unit vectors (zero-norm rows dropped) so
     PQ distances are monotone in cosine — the convention `pq_topk` uses.
     """
-    if sample_mod is None:
-        n = vectors.count()
-        sample_mod = max(1, -(-n // sample_cap))
-    pdf = (
-        vectors.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(sample_mod)) == 0)
-        .select(id_col, vec_col)
-        .toPandas()
-        .sort_values(id_col)
-    )
-    X = _stack_vectors(pdf[vec_col])
-    if X.size == 0:
-        raise ValueError("cannot train PQ codebooks on an empty sample")
+    X = _driver_sample(vectors, id_col, vec_col, sample_mod, sample_cap)
+    if not len(X):
+        return []
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -2086,21 +2009,6 @@ def pq_encode(
     # semantically deterministic; the mark only forbids Catalyst from
     # duplicating/reordering it, yielding one evaluation.
     return vectors.withColumn(out, _enc.asNondeterministic()(F.col(vec_col)))
-
-
-def nearest_cluster_expr_on(arr, centroids: list[list[float]]):
-    """`nearest_cluster_expr` over an arbitrary array expression (used for
-    subspace slices)."""
-    entries = []
-    for i, c in enumerate(centroids):
-        lit_c = F.lit([float(x) for x in c])  # one py4j call (r13)
-        d2 = F.aggregate(
-            F.zip_with(arr, lit_c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        entries.append(F.struct(d2.alias("d2"), F.lit(i).alias("c")))
-    return F.array_sort(F.array(*entries))[0]["c"]
 
 
 # Quantization scale for PQ's ADC partial distances: unit-normalized
@@ -2220,28 +2128,26 @@ def pq_topk(
     size at plan time (`auto_ann_params` — ADC rank quality dilutes with
     corpus scale, so r grows to the 64 ceiling).
     """
+    # the reranked output scores exact `cosine`; plain ADC `approx_cosine`
+    score = "approx_cosine" if rerank is None else "cosine"
     n_vec: int | None = None
     if rerank == "auto":
         n_vec = vectors.count()
         rerank = auto_ann_params(n_vec)["rerank"]
         if n_vec == 0:
-            return _empty_topk(vectors, id_col).withColumnRenamed(
-                "cosine", "approx_cosine"
-            )
-    if n_vec is None and vectors.first() is None:
-        return _empty_topk(vectors, id_col).withColumnRenamed("cosine", "approx_cosine")
+            return _empty_topk(vectors, id_col, score)
+    elif vectors.first() is None:
+        return _empty_topk(vectors, id_col, score)
     if codebooks is None:
         codebooks = train_pq_codebooks(
             vectors, m=m, k_codes=k_codes, id_col=id_col, vec_col=vec_col,
             seed=seed,
             # reuse the auto-rerank count for the trainer's sample-mod
             # derivation (one fewer count job; identical sample_mod)
-            sample_mod=(
-                None
-                if n_vec is None
-                else max(1, -(-n_vec // PQ_TRAIN_SAMPLE_CAP))
-            ),
+            sample_mod=None if n_vec is None else _sample_mod(n_vec),
         )
+        if not codebooks:
+            return _empty_topk(vectors, id_col, score)
     m = len(codebooks)
     spark = vectors.sparkSession
 
@@ -2263,6 +2169,8 @@ def pq_topk(
     if len(qrows) <= cap:
         table = []
         for r in qrows:
+            if r[vec_col] is None:
+                continue  # no direction; the distributed build drops it too
             qv = np.asarray(list(r[vec_col]), dtype=np.float64)
             nrm = float(np.linalg.norm(qv))
             if nrm == 0.0:
@@ -2376,8 +2284,9 @@ def lsh_topk(
     ≲ 2×10⁵-vector tier; larger corpora belong to ivf_topk /
     knn_graph / ann_join (bucket-join families whose index scales
     with n), the same adjudication pattern as ngram→minhash."""
-    first = vectors.select(vec_col).first()
-    if first is None or first[0] is None:
+    # the plane dimension comes from the first non-NULL vector
+    first = vectors.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    if first is None:
         return _empty_topk(vectors, id_col)
     if n_planes is None:
         n_planes = auto_ann_params(vectors.count())["n_planes"]

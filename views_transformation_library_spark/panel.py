@@ -85,18 +85,24 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def observed_metrics(obs) -> dict | None:
-    """Non-blocking read of an ``Observation``'s metrics: None until some
-    action has populated them (or when ``observe()`` never attached).
+def observed_metrics(obs, block: bool = False) -> dict | None:
+    """Read of an ``Observation``'s metrics. Non-blocking by default: None
+    until some action has populated them (or when ``observe()`` never
+    attached); ``block=True`` waits for the first action.
 
     PySpark's public ``Observation.get`` blocks until the first action, so
     the probe goes through the JVM handle once, here: ``getRowOrEmpty`` is
     an Option, safe before any action (the JVM ``getOrEmpty`` map NPEs via
-    py4j before the metrics row exists). Once the row exists, ``get``
-    returns at once."""
+    py4j before the metrics row exists). When Catalyst proves the observed
+    input empty and folds the plan above it into an empty relation, the
+    action publishes a metrics row with no fields, which
+    ``Observation.get`` cannot convert: that reads as ``{}`` (no row was
+    observed)."""
     jo = getattr(obs, "_jo", None)
-    if jo is None or jo.getRowOrEmpty().isEmpty():
+    if jo is None or (not block and jo.getRowOrEmpty().isEmpty()):
         return None
+    if jo.getRow().length() == 0:
+        return {}
     return obs.get
 
 
