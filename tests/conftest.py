@@ -29,6 +29,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def served(spark):
+    """The test session as `session.get_spark` configures it: get_spark
+    returns the running session and applies its runtime confs to it; the
+    test session's own values are put back afterwards."""
+    from views_transformation_library_spark.session import get_spark
+
+    before = spark.conf.getAll
+    session = get_spark()
+    yield session
+    for key, value in session.conf.getAll.items():
+        if before.get(key) != value and session.conf.isModifiable(key):
+            if key in before:
+                session.conf.set(key, before[key])
+            else:
+                session.conf.unset(key)
+
+
 def make_panel(spark, rows, cols=("time_id", "unit_id", "value")):
     """rows: list of tuples matching cols; None -> NULL, NaN stays NaN.
 

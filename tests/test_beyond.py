@@ -2224,6 +2224,8 @@ def _hostile_frames(spark, docs, op, case):
         return full, full.limit(0), None
     if case == "all_null":
         return full, spark.createDataFrame([(i, None) for i in range(60)], schema), None
+    if case == "all_zero":
+        return full, spark.createDataFrame([(i, [0.0] * 8) for i in range(60)], schema), None
     null = [(59, None)]
     return (
         full,
@@ -2235,12 +2237,14 @@ def _hostile_frames(spark, docs, op, case):
 @pytest.mark.parametrize(
     "op,case",
     [(op, c) for op in sorted(_VECTOR_OPS) for c in ("limit0", "all_null", "null_first")]
+    + [("pq_topk", "all_zero")]
     + [(op, c) for op in sorted(_DEDUP_OPS) for c in ("limit0", "filtered", "created_empty")],
 )
 def test_empty_and_null_inputs(spark, docs, op, case):
     """Empty and all-NULL inputs give the empty result with the output
     schema; a NULL row gives the same result wherever it sits (the first
-    row is not a sample of the corpus)."""
+    row is not a sample of the corpus). pq_topk scores unit vectors, so an
+    all-zero-norm corpus is empty to it too."""
     run = {**_VECTOR_OPS, **_DEDUP_OPS}[op]
     full, frame, twin = _hostile_frames(spark, docs, op, case)
     if twin is None:
@@ -2250,6 +2254,30 @@ def test_empty_and_null_inputs(spark, docs, op, case):
     else:
         got = sorted(run(frame).collect())
         assert got and got == sorted(run(twin).collect())
+
+
+def test_embedding_pca_schema_does_not_depend_on_data(spark):
+    """embedding_pca always adds pc0..pc{k-1} as doubles: a component the
+    sample cannot fit (an all-NULL corpus, or k above the dimension) is
+    NULL."""
+    full, all_null, _ = _hostile_frames(spark, None, "embedding_pca", "all_null")
+    fitted = similarity.embedding_pca(full, k=2)
+    empty = similarity.embedding_pca(all_null, k=2)
+    assert empty.dtypes == fitted.dtypes == full.dtypes + [("pc0", "double"), ("pc1", "double")]
+    assert {(r["pc0"], r["pc1"]) for r in empty.collect()} == {(None, None)}
+    wide = similarity.embedding_pca(full, k=10).collect()  # 8-dim vectors
+    assert all(r["pc7"] is not None and r["pc8"] is None and r["pc9"] is None for r in wide)
+
+
+def test_semantic_dedup_pretrained_centroids_on_null_corpus(spark):
+    """Pretrained centroids skip the trainer's empty-sample test; an
+    all-NULL corpus must still give the trained path's empty result, not
+    every row kept as cluster 0."""
+    full, all_null, _ = _hostile_frames(spark, None, "semantic_dedup", "all_null")
+    centroids = [[1.0] * 8, [-1.0] * 8]
+    out = similarity.semantic_dedup(all_null, threshold=0.3, centroids=centroids)
+    assert out.collect() == []
+    assert out.dtypes == similarity.semantic_dedup(full, threshold=0.3, centroids=centroids).dtypes
 
 
 @pytest.mark.parametrize("op", ["ivf_topk", "knn_graph", "semantic_dedup", "ann_join"])

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import make_panel
+from views_transformation_library_spark import session
 from views_transformation_library_spark.operators import dedup, profiling, spatial_graph, trees
 
 
@@ -94,3 +95,14 @@ def test_repeated_operator_compiles_nothing(spark, build):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert second == first
+
+
+def test_partitions_are_listed_on_the_driver(served):
+    """A get_spark session never lists a read path's directories through a
+    Spark job: at Spark's default threshold of 32 directories a month table
+    of more months is listed by a job of one task per directory, which in
+    local mode runs in the driver's own JVM and measured 10-30x slower than
+    listing them on the driver (session.py)."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert served.conf.get(key) == str(session.PARTITION_DISCOVERY_THRESHOLD)
+    assert session.PARTITION_DISCOVERY_THRESHOLD == 2**31 - 1  # Int.MaxValue: never

@@ -405,9 +405,10 @@ def train_pca(
     train_ivf_centroids pattern): xxhash64(id) % mod == 0 keeps ≤
     ~sample_cap vectors regardless of table size, sorted by id so the
     numpy pass is bit-reproducible — at 100 TB you fit the basis on ~1e5
-    hash-sampled vectors and PROJECT distributed."""
+    hash-sampled vectors and PROJECT distributed. An empty or all-NULL
+    sample fits no component: ``([], [])``."""
     X = _driver_sample(vectors, id_col, vec_col, sample_mod, sample_cap)
-    return pca_fit(X, k)
+    return pca_fit(X, k) if len(X) else ([], [])
 
 
 def train_pca_distributed(
@@ -500,11 +501,15 @@ def embedding_pca(
     sample_mod: int | None = None,
 ) -> DataFrame:
     """Dimension reduction for an embedding column: fit on the bounded
-    hash-sample, project every row. Output: input + pc0..pc{k-1}."""
+    hash-sample, project every row. Output: input + pc0..pc{k-1}; a
+    component the sample cannot fit (an empty or all-NULL sample, or
+    ``k`` above its dimension) is a NULL double."""
     mean, comps = train_pca(
         vectors, k, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
     )
-    return project_pca(vectors, mean, comps, vec_col=vec_col)
+    out = project_pca(vectors, mean, comps, vec_col=vec_col)
+    unfit = {f"pc{j}": F.lit(None).cast("double") for j in range(len(comps), k)}
+    return out.withColumns(unfit) if unfit else out
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -1278,7 +1283,8 @@ def _ivf_index(
     trainer gets ``_sample_mod(n)``; ``n == 0`` is the emptiness
     test. Only when no size is needed (pretrained centroids, or explicit
     parameters with a given ``sample_mod`` or distributed training) does
-    one cheap ``first()`` test for emptiness instead."""
+    one cheap ``first()`` over the non-NULL vectors test for emptiness
+    instead."""
     train = centroids is None
     need_n = (nprobe is None and auto_nprobe is not None) or (
         train and (n_centroids is None or (sample_mod is None and not train_distributed))
@@ -1288,7 +1294,7 @@ def _ivf_index(
         n = vectors.count()
         if n == 0:
             return None
-    elif vectors.select(vec_col).first() is None:
+    elif vectors.select(vec_col).filter(F.col(vec_col).isNotNull()).first() is None:
         return None
     if train:
         if n_centroids is None:
@@ -1921,7 +1927,8 @@ def train_pq_codebooks(
     k-means codebook, trained per subspace on the same bounded id-hash
     driver sample as `train_ivf_centroids` (≤ ~sample_cap rows at any
     table size). Returns m codebooks of k_codes × (dim/m) floats, or
-    ``[]`` when the sample holds no valid vector.
+    ``[]`` when the sample holds no valid vector (with ``normalize``, no
+    vector of non-zero norm).
 
     ``normalize=True`` trains on unit vectors (zero-norm rows dropped) so
     PQ distances are monotone in cosine — the convention `pq_topk` uses.
@@ -1935,6 +1942,8 @@ def train_pq_codebooks(
     if normalize:
         norms = np.linalg.norm(X, axis=1)
         X = X[norms > 0] / norms[norms > 0, None]
+        if not len(X):
+            return []
     sub = dim // m
     return [
         lloyd_kmeans(X[:, s * sub : (s + 1) * sub], k_codes, n_iters=n_iters, seed=seed + s)

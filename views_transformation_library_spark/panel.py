@@ -20,6 +20,8 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F, types as T
 
+from .sources import read_parquet
+
 TIME = "time_id"
 UNIT = "unit_id"
 KEYS = [TIME, UNIT]
@@ -338,7 +340,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     library needs for engine-parity keys."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return read_parquet(spark, f"{sf_dir}/events.parquet")
 
 
 def epoch_day(ev: DataFrame, ts_col: str = "ts"):

@@ -10,8 +10,22 @@ present in this image and are gated behind import-try.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 TABLES = [
     "region",
@@ -28,7 +42,7 @@ TABLES = [
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def read_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
@@ -36,10 +50,165 @@ def read_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
 
 
 def read_parquet(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
+    """Read a parquet file or directory (flat or Hive-style ``key=value``
+    partitioned). Without ``schema``, the schema comes from the one footer
+    Spark's own inference would read, read on the driver (`_footer_schema`),
+    so the read launches no Spark job; where that footer's Spark type could
+    differ from the mapped one, Spark infers it as before."""
+    return _read_parquet(spark, [path], schema)
+
+
+def _read_parquet(
+    spark: SparkSession,
+    paths: list[str],
+    schema: StructType | str | None = None,
+    footers: dict | None = None,
+) -> DataFrame:
+    """The one parquet read path. ``footers`` maps file paths to footers
+    the caller has already opened, so none is read twice."""
+    if schema is None:
+        schema = _footer_schema(spark, paths, footers or {})
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.parquet(path)
+    return reader.parquet(*paths)
+
+
+# Parquet columns whose Spark type no session conf changes, keyed by
+# (physical type, logical type, converted type) as pyarrow prints them.
+# Timestamps (int96AsTimestamp, inferTimestampNTZ, nanosAsLong), binary
+# (binaryAsString), decimals, dates, narrow and unsigned ints and nested
+# types are left to Spark's inference.
+_FOOTER_TYPES = {
+    ("BOOLEAN", "None", "NONE"): BooleanType(),
+    ("INT32", "None", "NONE"): IntegerType(),
+    ("INT32", "Int(bitWidth=32, isSigned=true)", "INT_32"): IntegerType(),
+    ("INT64", "None", "NONE"): LongType(),
+    ("INT64", "Int(bitWidth=64, isSigned=true)", "INT_64"): LongType(),
+    ("FLOAT", "None", "NONE"): FloatType(),
+    ("DOUBLE", "None", "NONE"): DoubleType(),
+    ("BYTE_ARRAY", "String", "UTF8"): StringType(),
+}
+# the Spark schema a Spark writer stores in the footer; inference prefers it
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+# a URI scheme, or a character Hadoop expands as a glob
+_NOT_A_LOCAL_PATH = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:|[{}\[\]*?\\]")
+
+
+def _footer_schema(spark: SparkSession, paths: list[str], footers: dict) -> StructType | None:
+    """The schema ``spark.read.parquet(*paths)`` would infer, read on the
+    driver from the same footer: Spark 4.1's `ParquetUtils.splitFiles`
+    sorts the listed leaf files by path string and reads
+    ``_common_metadata``, else ``_metadata``, else the first data file.
+    None — Spark infers — where the answer could differ: a path that is
+    not an absolute local one (a URI, a glob), a missing or empty path, a
+    symlink, schema merging, an unreadable footer, a column type outside
+    `_FOOTER_TYPES`, field ids or Spark field metadata, names that collide
+    case-insensitively or with a partition directory key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    leaves, keys = [], set()
+    for path in paths:
+        listed = _list_leaves(path)
+        if listed is None:
+            return None
+        leaves += listed[0]
+        keys |= listed[1]
+    if not leaves or spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    leaves.sort(key=lambda f: f.encode("utf-16-be"))  # Java's String order
+    first = {}
+    for f in leaves:
+        name = os.path.basename(f)
+        first.setdefault(name if name in _SUMMARY_FILES else "data", f)
+    chosen = first.get("_common_metadata") or first.get("_metadata") or first["data"]
+    md = footers.get(chosen)
+    try:
+        if md is None:
+            md = pq.read_metadata(chosen)
+        arrow_schema = md.schema.to_arrow_schema()
+    except (OSError, ValueError, pa.ArrowException):
+        return None
+    return _footer_struct(md, arrow_schema, keys)
+
+
+def _hidden(name: str) -> bool:
+    """Hadoop's listing filter (`HadoopFSUtils.shouldFilterOutPathName`):
+    Spark skips these names at every directory level."""
+    excluded = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return excluded and not name.startswith(_SUMMARY_FILES)
+
+
+def _list_leaves(path: str) -> tuple[list[str], set[str]] | None:
+    """The leaf files Spark lists under one read path, and the keys of its
+    ``key=value`` directories, raw and %-unescaped as Spark reads them;
+    None for a path this cannot mirror: not an absolute, normalized local
+    path, a glob, missing, holding a symlink, or unreadable."""
+    if (
+        _NOT_A_LOCAL_PATH.search(path)
+        or not os.path.isabs(path)
+        or path != os.path.normpath(path)
+        or os.path.islink(path)
+    ):
+        return None
+    if os.path.isfile(path):
+        return None if _hidden(os.path.basename(path)) else ([path], set())
+    if not os.path.isdir(path):
+        return None
+    leaves, keys, todo = [], set(), [path]
+    try:
+        while todo:
+            with os.scandir(todo.pop()) as entries:
+                for e in entries:
+                    if _hidden(e.name):
+                        continue
+                    if e.is_symlink():
+                        return None
+                    if not e.is_dir():
+                        leaves.append(e.path)
+                        continue
+                    todo.append(e.path)
+                    if "=" in e.name:
+                        key = e.name.split("=", 1)[0]
+                        keys |= {key, unquote(key)}
+    except OSError:
+        return None
+    return leaves, keys
+
+
+def _footer_struct(md, arrow_schema, partition_keys: set[str]) -> StructType | None:
+    """The Spark schema of a footer whose columns are all flat and of a
+    `_FOOTER_TYPES` type, nullable as Spark reads every file source; None
+    otherwise. A Spark-written footer's stored schema must agree."""
+    cols = [md.schema.column(i) for i in range(md.num_columns)]
+    if not cols or len(cols) != len(arrow_schema):
+        return None
+    fields = []
+    for c, af in zip(cols, arrow_schema):
+        kind = _FOOTER_TYPES.get((c.physical_type, str(c.logical_type), c.converted_type))
+        if kind is None or c.path != c.name or c.max_repetition_level or af.metadata:
+            return None
+        fields.append(StructField(c.name, kind, True))
+    lower = [f.name.lower() for f in fields]
+    if len(set(lower)) != len(lower) or set(lower) & {k.lower() for k in partition_keys}:
+        return None
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        try:
+            spark_fields = StructType.fromJson(json.loads(stored)).fields
+        except (ValueError, KeyError, TypeError):
+            return None
+        if [(f.name, f.dataType, f.metadata) for f in spark_fields] != [
+            (f.name, f.dataType, {}) for f in fields
+        ]:
+            return None
+    return StructType(fields)
 
 
 def read_csv(
@@ -270,9 +439,9 @@ def read_parquet_pruned(
         if f.endswith(".parquet")
     )
     files = sorted(set(files))
-    keep = []
+    keep, opened = [], {}
     for f in files:
-        md = _pq.ParquetFile(f).metadata
+        md = opened[f] = _pq.read_metadata(f)
         fmin = fmax = None
         have = True
         for rg in range(md.num_row_groups):
@@ -299,9 +468,8 @@ def read_parquet_pruned(
         stats["files_scanned"] = len(keep)
     if not keep:
         # preserve schema: read the dataset lazily and filter to nothing
-        empty = spark.read.parquet(path).filter(F.lit(False))
-        return empty
-    df = spark.read.parquet(*keep)
+        return _read_parquet(spark, [path], footers=opened).filter(F.lit(False))
+    df = _read_parquet(spark, keep, footers=opened)
     cond = F.lit(True)
     if lo is not None:
         cond = cond & (F.col(col) >= F.lit(lo))
